@@ -362,6 +362,13 @@ def run_scaling(sf_dir: str, out_md: str) -> None:
     import shutil
     import subprocess
 
+    n_cpus = len(os.sched_getaffinity(0))
+    if n_cpus < 32:
+        sys.exit(
+            f"bench.py --scaling pins CPU sets up to core 31 and needs 32 "
+            f"usable cores; this process may use {n_cpus}"
+        )
+
     tmp = tempfile.mkdtemp(prefix="scaling_")
     src = os.path.join(tmp, "pages")
     gen = get_spark("scaling-gen", cores=32)

@@ -106,6 +106,30 @@ def test_text_present_branch_byte_identical(spark):
     assert out[0]["text"] == "original text\nkept"
 
 
+def test_mixed_frame_keeps_every_row_once(spark):
+    """Text-present, html-only and all-NULL rows in one frame: each url
+    comes out exactly once, present text untouched, html-only rows
+    extracted, and a row with neither keeps ``text`` NULL."""
+    mixed = _pages_df(spark).unionByName(
+        spark.createDataFrame(
+            [
+                ("https://t/present", _TS, b"<p>other</p>", "kept\tas is ", "en"),
+                ("https://t/empty", _TS, None, None, None),
+            ],
+            PAGES_SCHEMA,
+        )
+    )
+    rows = extract_text(mixed).select("url", "text").collect()
+    urls = [r["url"] for r in rows]
+    assert len(rows) == len(PAGES) + 2
+    assert len(set(urls)) == len(urls)
+    got = {r["url"]: r["text"] for r in rows}
+    assert got["https://t/present"] == "kept\tas is "
+    assert got["https://t/empty"] is None
+    for url, html in PAGES:
+        assert got[url] == html_to_text_py(html.encode("utf-8")), url
+
+
 def test_pipeline_plan_still_exchange_free_with_html_rows(spark):
     """The extraction upgrade must not introduce a shuffle: the scored
     pipeline over a mixed (text / html-only) frame stays Exchange-free

@@ -50,14 +50,12 @@ def test_pipeline_is_shuffle_free(spark):
 
 def test_pipeline_single_python_stage(spark):
     """Exactly one Arrow/Python eval for langid — the NLP kernel — and
-    everything else stays JVM-side."""
+    everything else stays JVM-side; the mapInPandas source runs once."""
     pages = generate_pages(spark, 100, seed=1, partitions=4)
     scored = run_quality_pipeline(pages)
     p = plan_str(scored)
-    n_python = p.count("ArrowEvalPython") + p.count("BatchEvalPython")
-    # generator (mapInPandas) + langid; html-fallback branch re-runs
-    # langid on its own leg of the union
-    assert 0 < n_python <= 4, f"unexpected Python stages:\n{p}"
+    assert p.count("ArrowEvalPython") == 1, f"unexpected Python stages:\n{p}"
+    assert p.count("MapInPandas") == 1, f"source planned more than once:\n{p}"
     assert "BatchEvalPython" not in p, "row-at-a-time Python UDF crept in"
 
 

@@ -133,7 +133,7 @@ def test_cc_audit_reference_matches_spark(spark):
             text = text + "\ncard " + "".join(str(ord(c) % 10) for c in cn[:16]) + " on file"
         elif sel == 1:
             text = text + "\ncard 4111111111111111 on file"
-        cands = re.findall(r"\d{13,19}", text)
+        cands = re.findall(r"[0-9]{13,19}", text)
         nv = sum(1 for c in cands if luhn_valid_py(c))
         a = agg[lang]
         a[0] += 1

@@ -1,6 +1,6 @@
 """WARC source: framing correctness, gzip members, round-trip through
 the pages schema, and e2e into the quality pipeline's html-extraction
-branch (the fresh-crawl entry path)."""
+fallback (the fresh-crawl entry path)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from textcleaning_spark.plans.pipeline import extract_text, html_to_text_py
+from textcleaning_spark.plans.pipeline import (
+    extract_text,
+    html_to_text_py,
+    run_quality_pipeline,
+)
 from textcleaning_spark.sources.pages import generate_pages_pdf
 from textcleaning_spark.sources.warc import (
     parse_warc_bytes,
@@ -66,7 +70,7 @@ def test_non_response_records_skipped(tmp_path):
 
 def test_read_warc_spark_and_pipeline_extraction(spark, tmp_path):
     """Two archives (one gzipped) → read_warc glob → NULL-text pages →
-    extract_text's html branch reproduces the Python golden per url."""
+    extract_text's html fallback reproduces the Python golden per url."""
     pages = _pages()
     write_warc(os.path.join(tmp_path, "seg-0.warc"), pages[: N // 2])
     write_warc(
@@ -87,6 +91,19 @@ def test_read_warc_spark_and_pipeline_extraction(spark, tmp_path):
     }
     for url, _, html in pages:
         assert extracted[url] == html_to_text_py(html), url
+
+
+def test_pipeline_parses_each_archive_once(spark, tmp_path):
+    """The scored pipeline over a WARC glob plans ONE binaryFile scan,
+    ONE mapInPandas parse and ONE langid Python stage: every archive is
+    inflated and parsed once per action."""
+    write_warc(os.path.join(tmp_path, "seg-0.warc.gz"), _pages(), compress=True)
+    scored = run_quality_pipeline(read_warc(spark, os.path.join(tmp_path, "seg-*")))
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Scan binaryFile") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert scored.count() == N
 
 
 def test_read_warc_parallelizes_per_file(spark, tmp_path):

@@ -386,12 +386,6 @@ def generate_media(
 # ---------------------------------------------------------------------------
 # kernels
 # ---------------------------------------------------------------------------
-_DECODABLE = {
-    "image/bmp", "image/png", "image/jpeg", "audio/wav",
-    "video/x-raw-frames", "video/mp4",
-}
-
-
 def _fake_features(payload: bytes) -> list[float]:
     h = hashlib.md5(payload or b"").digest()
     return [round(b / 255.0, 6) for b in h[:FEATURE_DIM]]

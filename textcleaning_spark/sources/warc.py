@@ -8,9 +8,10 @@ reads them into the canonical pages shape:
 - :func:`read_warc` — ``spark.read.format("binaryFile")`` over a path
   glob, then ONE Arrow-batched ``mapInPandas`` stage parses each
   archive's response records into (url, warc_ts, html) rows, with
-  ``text``/``lang`` NULL so plans/pipeline.extract_text takes its
-  html-extraction branch — exactly how a fresh crawl enters the
-  engine.
+  ``text``/``lang`` NULL so plans/pipeline.extract_text extracts every
+  row's text from its html — exactly how a fresh crawl enters the
+  engine. The pipeline plans this source once, so each archive is
+  inflated and parsed once per action.
 - :func:`parse_warc_bytes` — the pure parser (record framing by
   ``Content-Length``, never by naive boundary splitting, so payloads
   containing 'WARC/1.0' cannot desynchronize it; HTTP response
