@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -46,7 +47,6 @@ HEADLINE = [
     "major_pos",
     "cleaned_text",
     "cooccurrence_edges",
-    "pricing_summary",
     "revenue_by_nation",
     "sliding_window_events",
     "user_sessions",
@@ -56,13 +56,8 @@ HEADLINE = [
     "cube_profile",
     "stem_surface_forms",
     "ann_lsh_topk",
-    "shipping_priority",
-    "late_shipment_priorities",
-    "rollup_revenue",
     "events_lead_lag",
     "embedding_near_dup_fast",
-    "volume_shipping",
-    "priority_class_by_returnflag",
     "events_in_purchase_windows",
     "asof_event_orders",
     "near_dup_clusters",
@@ -71,16 +66,12 @@ HEADLINE = [
     "incremental_upsert",
     "boilerplate_line_scrub",
     "rule_hit_profile",
-    "sole_late_supplier",
     "span_contamination",
     "simhash_near_dup",
-    "revenue_share_suppliers",
     "winnow_fingerprints",
     "source_quality_filter",
     "nb_quality_confusion",
-    "customer_order_distribution",
     "large_volume_orders",
-    "dormant_high_balance",
     "sequence_packing",
     "nb_holdout_confusion",
     "stratified_sample",
@@ -89,13 +80,9 @@ HEADLINE = [
     "lang_sampling_weights",
     "url_canonical_dedup",
     "token_count_histogram",
-    "top_supplier_revenue",
-    "promo_brand_revenue",
-    "returned_item_customers",
     "discount_revenue_forecast",
     "ppl_tertile_routing",
     "benchmark_decontam",
-    "nation_market_share",
     "host_keep_profile",
     "vocab_growth_curve",
     "incremental_crawl_dedup",
@@ -128,30 +115,54 @@ WARC_DOCS = int(os.environ.get("BENCH_WARC_DOCS", "20000"))
 WARC_FILES = int(os.environ.get("BENCH_WARC_FILES", "32"))
 
 
-def _consume(df) -> int:
-    """Force full execution without driver-side materialization cost."""
-    return df.write.format("noop").mode("overwrite").save() or df.count()
+# One timing rule for every bench leg: the median of REPS timed calls
+# after WARMUPS untimed ones.
+WARMUPS = 2
+REPS = 5
 
 
-def run_queries(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, float]:
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _measure(run) -> dict:
+    """Call ``run`` WARMUPS times untimed (spawn/reuse Python UDF
+    workers, compile codegen, let JIT C2 reach steady state — at 32
+    task threads the compiler threads compete with tasks, so one pass
+    is NOT enough), then report the MEDIAN of REPS timed calls with
+    min and max kept. Median, not min: on a shared VM with ±15-40%
+    ambient noise, min-of-N picks the one lucky-quiet rep and distorts
+    any cross-config ratio."""
+    for _ in range(WARMUPS):
+        run()
+    times = []
+    for _ in range(REPS):
+        t0 = time.perf_counter()
+        run()
+        times.append(time.perf_counter() - t0)
+    return {
+        "sec": round(statistics.median(times), 3),
+        "min": round(min(times), 3),
+        "max": round(max(times), 3),
+        "runs": [round(t, 3) for t in times],
+    }
+
+
+def _throughput(scored, n_docs: int) -> dict:
+    """Time noop writes of an already-built plan (py4j plan
+    construction is driver-side fixed cost, not engine throughput)."""
+    m = _measure(lambda: _noop(scored))
+    return {"n_docs": n_docs, **m, "docs_per_sec": round(n_docs / m["sec"], 1)}
+
+
+def run_queries(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, dict]:
+    """Per-query timing; each call re-plans the query, so the warmups
+    also compile that plan's whole-stage codegen."""
     qs = Q.queries()
-    # warmup: JVM/codegen/noop-sink initialization outside any timing
-    spark.range(1000).write.format("noop").mode("overwrite").save()
-    out: dict[str, float] = {}
-    for name in names if names is not None else HEADLINE:
-        fn = qs[name]
-        # steady state per query: first run compiles that plan's
-        # whole-stage codegen (JIT, driver-side only); timed runs
-        # measure engine throughput. Same methodology as the pipeline
-        # timing (warmup + best-of).
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        out[name] = round(min(times), 3)
-    return out
+    return {
+        name: _measure(lambda fn=qs[name]: _noop(fn(spark, sf_dir)))
+        for name in (names if names is not None else HEADLINE)
+    }
 
 
 def write_pages_corpus(spark, n_docs: int, path: str, n_files: int = 64) -> None:
@@ -162,48 +173,14 @@ def write_pages_corpus(spark, n_docs: int, path: str, n_files: int = 64) -> None
     generate_pages(spark, n_docs, seed=1234, partitions=n_files).write.parquet(path)
 
 
-def timed_pipeline(
-    spark, src: str, n_docs: int, iterations: int = 3, warmups: int = 1
-) -> dict:
-    """Time read→pipeline→noop-write on a pre-written corpus. Warmup
-    passes first (spawn/reuse Python UDF workers, compile codegen, let
-    JIT C2 reach steady state — at 32 task threads the compiler
-    threads compete with tasks, so one pass is NOT enough); then the
-    MEDIAN over ``iterations`` steady-state runs. Median, not min: on
-    a shared VM with ±15-40% ambient noise, min-of-N picks the one
-    lucky-quiet rep and distorts any cross-config ratio; the median is
-    robust and is applied identically to every parallelism level."""
+def pipeline_throughput(spark, n_docs: int) -> dict:
+    """read→pipeline→noop-write on a pre-written parquet corpus."""
     from textcleaning_spark.plans.pipeline import run_quality_pipeline
 
-    # plan built ONCE (py4j plan construction is driver-side fixed cost,
-    # not engine throughput); warmup passes spawn/reuse UDF workers and
-    # compile codegen before any timing
-    scored = run_quality_pipeline(spark.read.parquet(src))
-    for _ in range(max(warmups, 1)):
-        scored.write.format("noop").mode("overwrite").save()
-    times = []
-    for _ in range(iterations):
-        t0 = time.perf_counter()
-        scored.write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-    times.sort()
-    med = times[len(times) // 2] if len(times) % 2 else (
-        times[len(times) // 2 - 1] + times[len(times) // 2]
-    ) / 2
-    return {
-        "n_docs": n_docs,
-        "sec": round(med, 3),
-        "docs_per_sec": round(n_docs / med, 1),
-        "runs": [round(t, 3) for t in times],
-    }
-
-
-def pipeline_throughput(spark, n_docs: int, parallelism: int) -> dict:
-    """One-session convenience wrapper used by the default bench."""
     with tempfile.TemporaryDirectory() as tmp:
         src = os.path.join(tmp, "pages")
         write_pages_corpus(spark, n_docs, src)
-        return timed_pipeline(spark, src, n_docs)
+        return _throughput(run_quality_pipeline(spark.read.parquet(src)), n_docs)
 
 
 def write_warc_corpus(spark, n_docs: int, dirpath: str, n_files: int) -> None:
@@ -238,8 +215,8 @@ def write_warc_corpus(spark, n_docs: int, dirpath: str, n_files: int) -> None:
 def warc_throughput(spark, n_docs: int, n_files: int = WARC_FILES) -> dict:
     """Crawl-native soak: .warc.gz archives → read_warc → html
     extraction → keep verdict → noop write, timed like the parquet
-    pipeline (warmup + median of 3). Reports docs/s so the WARC entry
-    path has a headline throughput number next to the parquet one."""
+    pipeline. Reports docs/s so the WARC entry path has a headline
+    throughput number next to the parquet one."""
     from textcleaning_spark.plans.pipeline import run_quality_pipeline
     from textcleaning_spark.sources.warc import read_warc
 
@@ -248,22 +225,7 @@ def warc_throughput(spark, n_docs: int, n_files: int = WARC_FILES) -> dict:
         scored = run_quality_pipeline(
             read_warc(spark, os.path.join(tmp, "seg-*.warc.gz"))
         )
-        for _ in range(1):
-            scored.write.format("noop").mode("overwrite").save()
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            scored.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        times.sort()
-        med = times[len(times) // 2]
-    return {
-        "n_docs": n_docs,
-        "n_files": n_files,
-        "sec": round(med, 3),
-        "docs_per_sec": round(n_docs / med, 1),
-        "runs": [round(t, 3) for t in times],
-    }
+        return {"n_files": n_files, **_throughput(scored, n_docs)}
 
 
 # Queries per fresh JVM (0 = everything in one session). A 60-query
@@ -285,10 +247,10 @@ def _bench_group(sf_dir: str, cpus, names: list[str]) -> None:
     print("BENCH_GROUP_JSON " + json.dumps(out))
 
 
-def _run_grouped_queries(sf_dir: str, cpus) -> dict[str, float]:
+def _run_grouped_queries(sf_dir: str, cpus) -> dict[str, dict]:
     import subprocess
 
-    queries: dict[str, float] = {}
+    queries: dict[str, dict] = {}
     for gi in range(0, len(HEADLINE), BENCH_GROUP_SIZE):
         group = HEADLINE[gi : gi + BENCH_GROUP_SIZE]
         code = (
@@ -321,7 +283,7 @@ def run_bench(sf_dir: str, cpus: int | str) -> dict:
         queries = _run_grouped_queries(sf_dir, cpus)
         spark = get_spark("bench", cores=cpus)
         try:
-            pipe = pipeline_throughput(spark, PIPELINE_DOCS, n_cores)
+            pipe = pipeline_throughput(spark, PIPELINE_DOCS)
             warc = warc_throughput(spark, WARC_DOCS)
         finally:
             spark.stop()
@@ -329,11 +291,11 @@ def run_bench(sf_dir: str, cpus: int | str) -> dict:
         spark = get_spark("bench", cores=cpus)
         try:
             queries = run_queries(spark, sf_dir)
-            pipe = pipeline_throughput(spark, PIPELINE_DOCS, n_cores)
+            pipe = pipeline_throughput(spark, PIPELINE_DOCS)
             warc = warc_throughput(spark, WARC_DOCS)
         finally:
             spark.stop()
-    total = round(sum(queries.values()), 3)
+    total = round(sum(q["sec"] for q in queries.values()), 3)
     return {
         "metric": "headline_queries_total",
         "value": total,

@@ -1,11 +1,15 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for flagship queries.
+"""Generate PLANS.md: formatted physical plans for flagship queries.
 
 The point of the artifact: show, per query, that the plan is the one
 you'd want at 100 TB — filters pushed to the scan, columns pruned,
 dims broadcast, aggregation partial+final, Python confined to declared
 Arrow stages. tests/test_plans.py asserts the load-bearing properties;
 this file makes them reviewable.
+
+PLANS.md is generated on demand and not committed (it is in
+.gitignore): run `python scripts/dump_plans.py` to write it at the
+repo root.
 """
 
 from __future__ import annotations
@@ -27,30 +31,23 @@ FLAGSHIP = [
     ("tf_df_idf", "corpus stats — one explode + one agg (partial+final)"),
     ("cleaned_text", "scrub + array_join — pruned scan, zero shuffle"),
     ("revenue_by_nation", "star join — all dims broadcast, fact never pre-shuffles"),
-    ("shipping_priority", "Q3 shape — 3 pushed filters + TakeOrderedAndProject"),
     ("cooccurrence_edges", "self-join — hot-key guard before the quadratic join"),
-    ("rollup_revenue", "ROLLUP — Expand + single shuffle"),
+    ("training_mix_report", "ROLLUP — Expand + single shuffle"),
     ("char_bigram_ppl", "LM train+score — model joins broadcast"),
     ("word_keep_verdict", "keep rule — one corpus pass, tag projected (functional dep), broadcast rank-back"),
     ("events_in_purchase_windows", "range join — (key, time-bucket) equi join + residual, no per-key blowup"),
-    ("volume_shipping", "Q7 — bounded dims (nation aliases) broadcast; orders/customer/supplier left to AQE size stats (forced broadcast OOMs at 100x)"),
     ("incremental_upsert", "MERGE shape — full-outer join, one shuffle per side"),
     ("boilerplate_line_scrub", "CCNet cross-doc line dedup — 8-byte hash count shuffle, dup set broadcast back"),
     ("nb_quality_confusion", "NB distillation — labeled frame checkpointed once, vocab log-odds broadcast, integer sums"),
     ("sequence_packing", "concat-and-chunk packing — (lang, shard) window partitioning reused by the pack agg: ONE Exchange"),
     ("large_volume_orders", "Q18 — HAVING-derived semi-join, all stages hash on the orderkey family (AQE plans the joins)"),
-    ("dormant_high_balance", "Q22 — 1-row scalar broadcast (exact-decimal threshold), anti-join on filtered orders"),
     ("dedup_keep_verdict", "per-doc dedup verdict — components frame stays pair-sized, corpus back-join left to AQE (broadcasts at runtime)"),
     ("lang_sampling_weights", "temperature data mix — tiny lang agg + 1-row scalar broadcast"),
     ("url_canonical_dedup", "url dedup — scan-side canonical regexp chain, textbook two-phase distinct agg (partial before each Exchange)"),
     ("token_count_histogram", "token-budget histogram — one corpus pass, windows run on the ≤64-row bucket frame only"),
-    ("top_supplier_revenue", "Q15 — grouped revenue + global max from ONE fact scan (window over the grouped relation, exact-decimal equality)"),
-    ("promo_brand_revenue", "Q19 — cross-table OR with explicit per-side implications pushed into BOTH scans"),
-    ("returned_item_customers", "Q10 — pushed returnflag/date filters, nation-only broadcast, exact-decimal TakeOrderedAndProject top-20"),
     ("discount_revenue_forecast", "Q6 — all four predicates reach the parquet reader; partial agg then one exchange"),
     ("ppl_tertile_routing", "CCNet routing — LM model joins broadcast; per-lang ntile window (approx-cutoff scale path documented in the query)"),
     ("benchmark_decontam", "eval decontam — eval-span table broadcast, training spans never shuffle before the per-doc agg"),
-    ("nation_market_share", "Q8 — numerator CASE inside the same agg as the denominator: one pass, one shuffle; bounded dims broadcast"),
     ("host_keep_profile", "domain blocklist feed — canonicalize+host fused into the scoring project, one host-keyed agg with map-side partials"),
     ("vocab_growth_curve", "Heaps' law — first-occurrence argmin instead of quadratic prefix-distinct; 1-row scalar broadcast, <=10-row window"),
     ("dsir_selection", "DSIR — one conditional bucket agg (raw+target), 256-row weight broadcast, integer-sum doc agg, TakeOrderedAndProject"),

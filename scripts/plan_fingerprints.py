@@ -33,6 +33,8 @@ OUT = os.path.join(REPO, "tests", "fixtures", "plan_fingerprints.json")
 # Operator tokens counted in the executedPlan string. Substring counts
 # are deliberate: "Exchange" also matches BroadcastExchange, so the
 # hash-exchange count is exchanges - broadcast_exchanges in readers.
+# tests/test_plan_fingerprints.py checks with fingerprint() from here,
+# so the golden file and its check count the same way.
 TOKENS = {
     "exchange": "Exchange hashpartitioning",
     "broadcast_exchange": "BroadcastExchange",

@@ -156,11 +156,17 @@ NOINDEX_CASES = [
     ('<meta name="googlebot" content="noindex">', False),  # scope: robots only
     ("<p>noindex mentioned in prose</p>", False),
     ("<html><body>nothing</body></html>", False),
+    # Java's \s matches \x0B and RE2's does not
+    ('<meta\x0bname="robots" content="noindex">', False),
 ]
 
 
 def test_meta_noindex_differential(spark):
-    from textcleaning_spark.functions.links import meta_noindex, meta_noindex_py
+    """Spark, the Python twin and the DuckDB replay in
+    noindex_politeness_filter give one verdict per case."""
+    import duckdb
+
+    from textcleaning_spark.functions.links import _NOINDEX_RES, meta_noindex, meta_noindex_py
 
     htmls = [f"<html><head>{m}</head><body>x</body></html>".encode() for m, _ in NOINDEX_CASES]
     df = spark.createDataFrame([(h,) for h in htmls], "html binary")
@@ -168,6 +174,17 @@ def test_meta_noindex_differential(spark):
     want = [w for _, w in NOINDEX_CASES]
     assert got == want
     assert [meta_noindex_py(h) for h in htmls] == want
+    con = duckdb.connect()
+    duck = [
+        con.execute(
+            f"SELECT regexp_matches(html, '{_NOINDEX_RES[0]}')"
+            f" OR regexp_matches(html, '{_NOINDEX_RES[1]}') FROM (SELECT ? AS html)",
+            [h.decode()],
+        ).fetchone()[0]
+        for h in htmls
+    ]
+    con.close()
+    assert duck == want
 
 
 def test_drop_noindex_matches_planted_set(spark):

@@ -17,6 +17,7 @@ import os
 
 import pytest
 
+from scripts.plan_fingerprints import fingerprint
 from textcleaning_spark import queries as Q
 from tests.conftest import SF_ORACLE
 
@@ -24,19 +25,6 @@ FIX = os.path.join(os.path.dirname(__file__), "fixtures", "plan_fingerprints.jso
 
 with open(FIX) as f:
     GOLDEN = json.load(f)
-
-TOKENS = {
-    "exchange": "Exchange hashpartitioning",
-    "broadcast_exchange": "BroadcastExchange",
-    "smj": "SortMergeJoin",
-    "bhj": "BroadcastHashJoin",
-    "bnlj": "BroadcastNestedLoopJoin",
-    "cartesian": "CartesianProduct",
-    "scan_parquet": "FileScan parquet",
-    "window": "Window",
-    "global_sort": "Sort [",
-    "python_eval": "Python",
-}
 
 
 def test_fingerprints_cover_registry():
@@ -48,9 +36,7 @@ def test_fingerprints_cover_registry():
 
 @pytest.mark.parametrize("name", sorted(GOLDEN))
 def test_plan_shape_unchanged(spark, name):
-    df = Q.queries()[name](spark, SF_ORACLE)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    got = {k: p.count(tok) for k, tok in TOKENS.items()}
+    got = fingerprint(Q.queries()[name](spark, SF_ORACLE))
     assert got == GOLDEN[name], (
         f"{name}: plan shape drifted (golden={GOLDEN[name]}, got={got}); "
         "if intentional, regenerate scripts/plan_fingerprints.py"

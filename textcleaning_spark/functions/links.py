@@ -80,15 +80,24 @@ def resolve_host(href: Column, src_host: Column) -> Column:
 # content list. Honoring noindex is a baseline crawl-politeness /
 # compliance requirement — pages asking to stay out of indexes should
 # be dropped BEFORE any quality scoring spends cycles on them.
+# Whitespace is spelled [ \t\r\n], not \s: Java's \s also matches \x0B
+# and RE2's does not, and noindex_politeness_filter replays these
+# patterns in DuckDB.
+_WS = r"[ \t\r\n]"
 _NOINDEX_RES = (
-    r'(?i)<meta\s[^>]*name\s*=\s*"robots"[^>]*content\s*=\s*"[^"]*noindex',
-    r'(?i)<meta\s[^>]*content\s*=\s*"[^"]*noindex[^"]*"[^>]*name\s*=\s*"robots"',
+    rf'(?i)<meta{_WS}[^>]*name{_WS}*={_WS}*"robots"[^>]*content{_WS}*={_WS}*"[^"]*noindex',
+    rf'(?i)<meta{_WS}[^>]*content{_WS}*={_WS}*"[^"]*noindex[^"]*"[^>]*name{_WS}*={_WS}*"robots"',
 )
 
 
 def meta_noindex(html_col: Column | str) -> Column:
     """True iff the page carries ``<meta name="robots" … noindex …>``.
-    Native decode + two rlike passes, scan-side; false for null html."""
+    Native decode + two rlike passes, scan-side; false for null html.
+
+    ``(?i)`` is relied on only for the ASCII literals of the patterns.
+    Java folds ASCII case only, while RE2 and Python also fold ``ſ`` to
+    ``s`` and the Kelvin sign ``K`` to ``k``; the corpus carries neither,
+    so the three engines agree on it."""
     c = F.col(html_col) if isinstance(html_col, str) else html_col
     s = F.decode(c, "UTF-8")
     return F.coalesce(
