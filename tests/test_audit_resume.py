@@ -3,11 +3,18 @@ recomputing completed buckets (north_rule)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
-from textcleaning_spark.plans.audit import completed_buckets, pending, run_resumable
+from textcleaning_spark.plans.audit import (
+    completed_buckets,
+    pending,
+    run_resumable,
+    write_stage,
+)
 from textcleaning_spark.plans.pipeline import run_quality_pipeline
 from textcleaning_spark.sources.pages import generate_pages
 
@@ -44,6 +51,29 @@ def test_partial_crash_resume(spark, scored, tmp_path):
     done = completed_buckets(spark, audit, "quality_filter")
     assert done.count() == len(buckets)
     assert pending(scored, spark, audit, "quality_filter").count() == 0
+
+
+def _files_per_bucket(out: str) -> dict[str, int]:
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(out, d)))
+        for d in os.listdir(out)
+        if d.startswith("lineage_bucket=")
+    }
+
+
+def test_write_stage_one_file_per_bucket(spark, scored, tmp_path):
+    """Hash-clustered layout: a multi-partition input still writes ONE
+    data file per lineage bucket (not one per input task and bucket),
+    and rewriting the same buckets keeps it that way."""
+    out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
+    assert scored.rdd.getNumPartitions() >= 4
+    n_buckets = scored.select("lineage_bucket").distinct().count()
+    for _ in range(2):  # second pass overwrites the same buckets
+        write_stage(scored, spark, out, audit, "quality_filter")
+        per_bucket = _files_per_bucket(out)
+        assert len(per_bucket) == n_buckets
+        assert set(per_bucket.values()) == {1}, per_bucket
+        assert spark.read.parquet(out).count() == 200
 
 
 def test_storage_format_capability_probe(spark):

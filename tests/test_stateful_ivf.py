@@ -11,7 +11,7 @@ from textcleaning_spark.operators.similarity import cosine_topk_bruteforce
 from textcleaning_spark.operators.windows import sessionize
 from textcleaning_spark.sources.registry import load_table
 from textcleaning_spark.streaming.stateful import sessionize_stream
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, no_data_batches_off
 
 
 def test_stateful_stream_sessions_match_batch(spark, tmp_path):
@@ -26,15 +26,16 @@ def test_stateful_stream_sessions_match_batch(spark, tmp_path):
     stream = (
         spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 4).parquet(src)
     )
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    with no_data_batches_off(spark):
+        q = (
+            sessionize_stream(stream, gap_minutes=30)
+            .writeStream.format("memory")
+            .queryName("sessions")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+    assert q.awaitTermination(180)
     got = spark.sql("SELECT * FROM sessions").toPandas()
 
     # batch truth: closed sessions = all sessions except each user's last

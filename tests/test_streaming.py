@@ -11,6 +11,7 @@ from textcleaning_spark.streaming.stream import (
     run_quality_stream_once,
     windowed_lang_counts,
 )
+from tests.conftest import no_data_batches_off
 
 
 def test_stream_matches_batch(spark, tmp_path):
@@ -95,14 +96,15 @@ def test_near_dup_stream_flags_band_collisions(spark, tmp_path):
     recrawl.write.mode("append").parquet(src)
 
     flagged = near_dup_stream(read_pages_stream(spark, src))
-    q = (
-        flagged.writeStream.format("memory")
-        .queryName("neardupstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with no_data_batches_off(spark):
+        q = (
+            flagged.writeStream.format("memory")
+            .queryName("neardupstream")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM neardupstream").collect()
     n_texts = pages.select("text").distinct().count()
     by_id = {r["doc_id"]: r for r in rows}

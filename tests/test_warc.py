@@ -182,3 +182,62 @@ def test_truncated_final_payload_yields_prefix():
     rec = _response_rec(b"https://t.test/", b"2024-06-01T00:00:00Z", b"<p>full</p>")
     got = list(parse_warc_bytes(rec[:-8]))  # cut into the payload
     assert len(got) == 1 and got[0][2].startswith(b"<p>f")
+
+
+def test_non_utf8_pages_cost_no_records(spark, tmp_path):
+    """Invalid UTF-8 in a crawl (a cp1252 page, a truncated multibyte
+    sequence, a UTF-16 ``\\xff\\xfe`` page) must not fail the job: every
+    record yields one pipeline row, and the native decode (invalid
+    bytes → U+FFFD) equals the Python twins' ``decode("utf-8",
+    "replace")`` through extraction, keep verdict, scrub and links."""
+    from datetime import datetime
+
+    from textcleaning_spark.config import DEFAULT_CONFIG
+    from textcleaning_spark.functions.links import (
+        meta_noindex,
+        meta_noindex_py,
+        outlink_hrefs,
+        outlink_hrefs_py,
+    )
+    from textcleaning_spark.functions.scrub import scrub_py
+    from tests.test_pipeline_golden import golden_keep
+
+    prose = "the shop on the corner is open and we like to visit it with our friends"
+    bad = [
+        # cp1252: é, ï and curly quotes are single bytes, invalid UTF-8
+        b"<html><body><p>The caf\xe9 is open and the na\xefve visitors say "
+        + b"\x93hello\x94 to " + prose.encode() + b'</p><a href="/m\xe9nu">x</a>'
+        + b"</body></html>",
+        # truncated multibyte sequences, mid-text and at the very end
+        b"<p>" + prose.encode() + b" price \xe2\x82 and \xf0\x9f\x98</p>\xe4\xb8",
+        # UTF-16LE with its byte-order mark
+        b"\xff\xfe" + f'<meta name="robots" content="noindex"><p>{prose}</p>'.encode(
+            "utf-16-le"
+        ),
+    ]
+    pages = _pages()[:12] + [
+        (f"https://enc.test/{i}", datetime(2024, 6, 1), html)
+        for i, html in enumerate(bad)
+    ]
+    write_warc(os.path.join(tmp_path, "seg-0.warc.gz"), pages, compress=True)
+    df = read_warc(spark, os.path.join(tmp_path, "seg-*"))
+    out = run_quality_pipeline(df).select("url", "text", "keep", "scrubbed_text")
+    rows = out.collect()
+    assert sorted(r["url"] for r in rows) == sorted(u for u, _, _ in pages)
+    got = {r["url"]: r for r in rows}
+    cfg = DEFAULT_CONFIG
+    for url, _, html in pages:
+        text = html_to_text_py(html)
+        keep = golden_keep(text, cfg.quality)
+        assert got[url]["text"] == text, url
+        assert got[url]["keep"] == keep, url
+        assert got[url]["scrubbed_text"] == (scrub_py(text, cfg.scrub) if keep else None)
+    assert "�" in got["https://enc.test/0"]["text"]
+
+    links = df.select(
+        "url", outlink_hrefs("html").alias("hrefs"), meta_noindex("html").alias("ni")
+    ).collect()
+    for r in links:
+        html = next(h for u, _, h in pages if u == r["url"])
+        assert r["hrefs"] == outlink_hrefs_py(html), r["url"]
+        assert r["ni"] == meta_noindex_py(html), r["url"]

@@ -36,6 +36,7 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from textcleaning_spark.functions.text import decode_utf8, decode_utf8_py
 from textcleaning_spark.functions.urls import canonical_url, host
 
 # <a ...href="...">: '<a' + one whitespace char anchors the tag name
@@ -53,7 +54,7 @@ def outlink_hrefs(html_col: Column | str) -> Column:
     empty, never null for non-null html). One decode + one
     ``regexp_extract_all`` — codegen'd, scan-side."""
     c = F.col(html_col) if isinstance(html_col, str) else html_col
-    return F.regexp_extract_all(F.decode(c, "UTF-8"), F.lit(_HREF_RE), 1)
+    return F.regexp_extract_all(decode_utf8(c), F.lit(_HREF_RE), 1)
 
 
 def resolve_host(href: Column, src_host: Column) -> Column:
@@ -99,7 +100,7 @@ def meta_noindex(html_col: Column | str) -> Column:
     ``s`` and the Kelvin sign ``K`` to ``k``; the corpus carries neither,
     so the three engines agree on it."""
     c = F.col(html_col) if isinstance(html_col, str) else html_col
-    s = F.decode(c, "UTF-8")
+    s = decode_utf8(c)
     return F.coalesce(
         s.rlike(_NOINDEX_RES[0]) | s.rlike(_NOINDEX_RES[1]), F.lit(False)
     )
@@ -123,12 +124,11 @@ _CANON_STEPS_PY: tuple[tuple[str, str], ...] = (
 
 
 def outlink_hrefs_py(html: bytes | str) -> list[str]:
-    s = html.decode("utf-8") if isinstance(html, (bytes, bytearray)) else html
-    return re.findall(_HREF_RE, s)
+    return re.findall(_HREF_RE, decode_utf8_py(html))
 
 
 def meta_noindex_py(html: bytes | str) -> bool:
-    s = html.decode("utf-8") if isinstance(html, (bytes, bytearray)) else html
+    s = decode_utf8_py(html)
     return any(re.search(p, s) for p in _NOINDEX_RES)
 
 

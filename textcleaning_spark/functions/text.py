@@ -24,6 +24,26 @@ from pyspark.sql import functions as F
 from textcleaning_spark.config import STOP_WORDS, QualityConfig
 
 # ---------------------------------------------------------------------------
+# page bytes → text
+# ---------------------------------------------------------------------------
+
+
+def decode_utf8(col: Column) -> Column:
+    """Page bytes → string. Invalid UTF-8 (a cp1252 page, a truncated
+    multibyte sequence) becomes U+FFFD, as in :func:`decode_utf8_py`;
+    Spark 4's ``decode`` raises instead and would fail the whole job
+    for one page. Valid UTF-8 passes unchanged."""
+    return F.make_valid_utf8(col.cast("string"))
+
+
+def decode_utf8_py(page: bytes | str) -> str:
+    """Python twin of :func:`decode_utf8`; ``str`` passes through."""
+    if isinstance(page, (bytes, bytearray)):
+        return page.decode("utf-8", "replace")
+    return page
+
+
+# ---------------------------------------------------------------------------
 # tokens
 # ---------------------------------------------------------------------------
 
@@ -88,12 +108,17 @@ def _stop_words_sql_list() -> str:
     return f"[{inner}]"
 
 
+def is_stop_word(tok: Column) -> Column:
+    """``lower(tok) IN (STOP_WORDS)``, usable inside higher-order
+    function lambdas. Above 10 literals Catalyst's OptimizeIn plans it
+    as an ``InSet`` hash probe; ``array_contains`` on a literal array
+    would scan all 100 words per token."""
+    return F.lower(tok).isin(*STOP_WORDS)
+
+
 def stop_word_count(col: Column | str) -> Column:
     """Count of tokens (not distinct) that are stop words (P9 signal)."""
-    stop_arr = F.array(*[F.lit(w) for w in STOP_WORDS])
-    return F.size(
-        F.filter(tokens(col), lambda x: F.array_contains(stop_arr, F.lower(x)))
-    ).cast("bigint")
+    return F.size(F.filter(tokens(col), is_stop_word)).cast("bigint")
 
 
 def stop_word_count_sql(col: str) -> str:

@@ -29,11 +29,8 @@ def score_documents(
     the naive re-derive-per-signal tree, and the whole stage stays one
     shuffle-free codegen'd project.
     """
-    from textcleaning_spark.config import STOP_WORDS
-
     cfg = cfg or QualityConfig()
     c = text_col
-    stop_arr = F.array(*[F.lit(w) for w in STOP_WORDS])
 
     # __toks/__lines/__grams each materialized ONCE as a column — an
     # expression reused inside several signals would be BUILT duplicated
@@ -58,11 +55,7 @@ def score_documents(
         .withColumn("__syms", T.substr_count(c, "#") + T.substr_count(c, "..."))
         .withColumn(
             "__stop",
-            F.size(
-                F.filter(
-                    F.col("__toks"), lambda x: F.array_contains(stop_arr, F.lower(x))
-                )
-            ).cast("bigint"),
+            F.size(F.filter(F.col("__toks"), T.is_stop_word)).cast("bigint"),
         )
         # \p{L} (any Unicode letter) — [A-Za-z] would drop every clean
         # Hangul/Han document as "non-alpha"; identical semantics in

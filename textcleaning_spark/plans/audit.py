@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from textcleaning_spark.plans.pipeline import N_LINEAGE_BUCKETS
+
 _ICEBERG_PROBE_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 
 
@@ -92,6 +94,19 @@ def write_stage(
     """Write stage output partitioned by lineage bucket, then append
     one audit row per bucket (with rule-hit metrics when provided).
 
+    Layout: rows are hash-clustered by ``lineage_bucket`` before the
+    write (Iceberg's default ``write.distribution-mode=hash``), so each
+    bucket is written by exactly one task: ONE data file per bucket per
+    pass, not one per (input task, bucket). Per-file cost, not bytes,
+    sets the local write time: without libhadoop, Hadoop's local file
+    system forks ``chmod`` for every file it creates. The task
+    count is explicit, ``min(defaultParallelism, N_LINEAGE_BUCKETS)``:
+    AQE coalesces a key-only repartition of this small shuffle into ONE
+    task that creates every file serially, and leaves an explicit count
+    alone, so all cores write. Write parallelism per pass is therefore
+    at most the bucket count, which is also the resume unit. Row order
+    inside a file is not part of the contract.
+
     ``fmt`` defaults to :func:`storage_format` — ``iceberg`` when the
     runtime jar is present, else ``parquet``. Both legs use dynamic
     partition overwrite so only the buckets present in THIS write are
@@ -99,8 +114,10 @@ def write_stage(
     a crash between the two re-runs the bucket (at-least-once,
     idempotent because the data write is per-bucket overwrite)."""
     fmt = fmt or storage_format(spark)
+    n_tasks = min(spark.sparkContext.defaultParallelism, N_LINEAGE_BUCKETS)
     (
-        scored.write.format(fmt).mode("overwrite")
+        scored.repartition(n_tasks, "lineage_bucket")
+        .write.format(fmt).mode("overwrite")
         # only replace the buckets present in THIS write — completed
         # buckets from previous (partial) runs stay untouched
         .option("partitionOverwriteMode", "dynamic")

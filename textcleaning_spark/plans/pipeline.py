@@ -12,7 +12,7 @@
 
 Every stage is DataFrame → DataFrame and lazily composed: Catalyst
 fuses the native stages into one scan-side project over ONE scan of
-the source; only langid (and optional perplexity) cross into Python,
+the source; only langid crosses into Python,
 Arrow-batched, in one ArrowEvalPython stage.
 
 Scale design: shuffle-free until the metrics aggregation; skew from
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from textcleaning_spark.config import DEFAULT_CONFIG, PipelineConfig
 from textcleaning_spark.functions.langid import langid_udf
 from textcleaning_spark.functions.scrub import rule_hits, scrub_col
+from textcleaning_spark.functions.text import decode_utf8, decode_utf8_py
 from textcleaning_spark.operators.quality import drop_reasons, score_documents
 
 N_LINEAGE_BUCKETS = 64
@@ -59,8 +60,9 @@ _HTML_ENTITIES: tuple[tuple[str, str], ...] = (
 
 
 def html_to_text_col(html_col) -> "F.Column":
-    """Native regexp chain: html binary → extracted text (no Python)."""
-    s = F.decode(html_col, "UTF-8")
+    """Native regexp chain: html binary → extracted text (no Python).
+    Invalid UTF-8 becomes U+FFFD (:func:`functions.text.decode_utf8`)."""
+    s = decode_utf8(html_col)
     for pat in _HTML_STRIP_RES:
         s = F.regexp_replace(s, pat, " ")
     for ent, rep in _HTML_ENTITIES:
@@ -72,7 +74,7 @@ def html_to_text_py(html: bytes | str) -> str:
     """Python twin of :func:`html_to_text_col` (differential-tested)."""
     import re
 
-    s = html.decode("utf-8") if isinstance(html, (bytes, bytearray)) else html
+    s = decode_utf8_py(html)
     for pat in _HTML_STRIP_RES:
         s = re.sub(pat, " ", s)
     for ent, rep in _HTML_ENTITIES:
