@@ -47,19 +47,14 @@ HEADLINE = [
     "major_pos",
     "cleaned_text",
     "cooccurrence_edges",
-    "revenue_by_nation",
     "sliding_window_events",
-    "user_sessions",
     "exact_dedup",
     "minhash_signatures",
     "scrub_parity",
     "cube_profile",
     "stem_surface_forms",
     "ann_lsh_topk",
-    "events_lead_lag",
     "embedding_near_dup_fast",
-    "events_in_purchase_windows",
-    "asof_event_orders",
     "near_dup_clusters",
     "deterministic_sample",
     "curriculum_selection",
@@ -71,7 +66,6 @@ HEADLINE = [
     "winnow_fingerprints",
     "source_quality_filter",
     "nb_quality_confusion",
-    "large_volume_orders",
     "sequence_packing",
     "nb_holdout_confusion",
     "stratified_sample",
@@ -80,7 +74,6 @@ HEADLINE = [
     "lang_sampling_weights",
     "url_canonical_dedup",
     "token_count_histogram",
-    "discount_revenue_forecast",
     "ppl_tertile_routing",
     "benchmark_decontam",
     "host_keep_profile",

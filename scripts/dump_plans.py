@@ -30,22 +30,18 @@ FLAGSHIP = [
     ("doc_quality_profile", "keep/drop rollup — all-native signals, one scan"),
     ("tf_df_idf", "corpus stats — one explode + one agg (partial+final)"),
     ("cleaned_text", "scrub + array_join — pruned scan, zero shuffle"),
-    ("revenue_by_nation", "star join — all dims broadcast, fact never pre-shuffles"),
     ("cooccurrence_edges", "self-join — hot-key guard before the quadratic join"),
     ("training_mix_report", "ROLLUP — Expand + single shuffle"),
     ("char_bigram_ppl", "LM train+score — model joins broadcast"),
     ("word_keep_verdict", "keep rule — one corpus pass, tag projected (functional dep), broadcast rank-back"),
-    ("events_in_purchase_windows", "range join — (key, time-bucket) equi join + residual, no per-key blowup"),
     ("incremental_upsert", "MERGE shape — full-outer join, one shuffle per side"),
     ("boilerplate_line_scrub", "CCNet cross-doc line dedup — 8-byte hash count shuffle, dup set broadcast back"),
     ("nb_quality_confusion", "NB distillation — labeled frame checkpointed once, vocab log-odds broadcast, integer sums"),
     ("sequence_packing", "concat-and-chunk packing — (lang, shard) window partitioning reused by the pack agg: ONE Exchange"),
-    ("large_volume_orders", "Q18 — HAVING-derived semi-join, all stages hash on the orderkey family (AQE plans the joins)"),
     ("dedup_keep_verdict", "per-doc dedup verdict — components frame stays pair-sized, corpus back-join left to AQE (broadcasts at runtime)"),
     ("lang_sampling_weights", "temperature data mix — tiny lang agg + 1-row scalar broadcast"),
     ("url_canonical_dedup", "url dedup — scan-side canonical regexp chain, textbook two-phase distinct agg (partial before each Exchange)"),
     ("token_count_histogram", "token-budget histogram — one corpus pass, windows run on the ≤64-row bucket frame only"),
-    ("discount_revenue_forecast", "Q6 — all four predicates reach the parquet reader; partial agg then one exchange"),
     ("ppl_tertile_routing", "CCNet routing — LM model joins broadcast; per-lang ntile window (approx-cutoff scale path documented in the query)"),
     ("benchmark_decontam", "eval decontam — eval-span table broadcast, training spans never shuffle before the per-doc agg"),
     ("host_keep_profile", "domain blocklist feed — canonicalize+host fused into the scoring project, one host-keyed agg with map-side partials"),

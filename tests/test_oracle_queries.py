@@ -3,11 +3,16 @@ replica of the driver's CORRECTNESS gate."""
 
 from __future__ import annotations
 
+import os
+import runpy
+
 import pytest
 
 from textcleaning_spark import queries as Q
 from tests.conftest import SF_ORACLE
 from tests.oracle_harness import compare, duckdb_connect
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +47,7 @@ def test_queries_and_oracles_consistent():
     # rows-only entries are the known approximations, nothing else
     # (frozen per VERDICT r4 item 8 — grow only with a documented
     # structural justification: Spark-internal hashing, GK sketches,
-    # iterative training, numpy codecs)
+    # iterative training)
     rows_only = sorted(set(qs) - set(osql))
     assert rows_only == [
         "ann_ivf_topk",
@@ -52,7 +57,13 @@ def test_queries_and_oracles_consistent():
         "bpe_merge_table",
         "embedding_near_dup_fast",
         "hyperball_centrality_audit",
-        "media_feature_profile",
         "ppl_cutoff_routing",
         "vocab_hll_audit",
     ]
+    # the bench and plan-dump name lists only name registered queries
+    import bench
+
+    assert set(bench.HEADLINE) <= set(qs), sorted(set(bench.HEADLINE) - set(qs))
+    dump_plans = runpy.run_path(os.path.join(REPO, "scripts", "dump_plans.py"))
+    flagship = {name for name, _ in dump_plans["FLAGSHIP"]}
+    assert flagship <= set(qs), sorted(flagship - set(qs))

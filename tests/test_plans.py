@@ -6,8 +6,6 @@ bug even if results stay correct."""
 
 from __future__ import annotations
 
-import pytest
-
 from textcleaning_spark import queries as Q
 from textcleaning_spark.plans.pipeline import run_quality_pipeline
 from textcleaning_spark.sources.pages import generate_pages
@@ -24,14 +22,6 @@ def test_cleaned_text_prunes_scan(spark):
     scan = [l for l in p.splitlines() if "FileScan parquet" in l][0]
     assert "doc_id" in scan and "text" in scan
     assert "n_chars" not in scan and "source" not in scan
-
-
-def test_revenue_join_broadcasts_dims(spark):
-    """Star join: all three dims broadcast; the fact side never
-    shuffles before aggregation."""
-    p = plan_str(Q.queries()["revenue_by_nation"](spark, SF_ORACLE))
-    assert p.count("BroadcastHashJoin") == 3
-    assert "SortMergeJoin" not in p
 
 
 def test_pipeline_is_shuffle_free(spark):
@@ -97,14 +87,6 @@ def test_upsert_single_shuffle_per_side(spark):
     assert p.count("Exchange hashpartitioning(doc_id") == 2
 
 
-def test_range_join_equi_prefilter(spark):
-    """Range join must run as an equi join on (key, bucket) with the
-    time residual INSIDE the join — never a cartesian/BNLJ."""
-    p = plan_str(Q.queries()["events_in_purchase_windows"](spark, SF_ORACLE))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
 def test_winnow_fingerprints_shuffle_free(spark):
     """Winnowing is a per-row selection: one scan, zero Exchanges, no
     Python stage, and NO inferred-filter duplication — plain explode
@@ -140,38 +122,6 @@ def test_sequence_packing_single_exchange(spark):
     assert p.count("Exchange") == 1, p
     assert "rangepartitioning" not in p.lower()
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_large_volume_orders_no_forced_hints(spark):
-    """Q18 shape: the HAVING semi-join must be planned by AQE, not
-    forced — no hint survives to the logical plan — and everything
-    hashes on the orderkey family (no cartesian)."""
-    df = Q.queries()["large_volume_orders"](spark, SF_ORACLE)
-    logical = df._jdf.queryExecution().logical().toString()
-    assert "UnresolvedHint" not in logical and "hints=[" not in logical
-    p = plan_str(df)
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
-def plan_formatted(df) -> str:
-    """explain('formatted') text — PushedFilters lists are printed in
-    full there, while executedPlan().toString() truncates long ones."""
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
-def test_q6_all_predicates_pushed_single_exchange(spark):
-    """Q6 shape: every range predicate reaches the parquet reader and
-    the plan is scan → partial agg → ONE exchange → final agg."""
-    df = Q.queries()["discount_revenue_forecast"](spark, SF_ORACLE)
-    scan = [l for l in plan_formatted(df).splitlines() if "PushedFilters" in l][0]
-    assert "GreaterThanOrEqual(l_shipdate" in scan
-    assert "LessThan(l_shipdate" in scan
-    assert "GreaterThanOrEqual(l_discount,0.05)" in scan
-    assert "LessThanOrEqual(l_discount,0.07)" in scan
-    assert "LessThan(l_quantity,24.0)" in scan
-    assert plan_str(df).count("Exchange") == 1
 
 
 def test_ppl_cutoff_routing_no_per_lang_sort(spark):

@@ -1,64 +1,13 @@
-"""Stateful streaming sessionization + IVF ANN."""
+"""IVF ANN recall and probe pruning."""
 
 from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import functions as F
-
 from textcleaning_spark.operators.ivf import ivf_topk
 from textcleaning_spark.operators.similarity import cosine_topk_bruteforce
-from textcleaning_spark.operators.windows import sessionize
 from textcleaning_spark.sources.registry import load_table
-from textcleaning_spark.streaming.stateful import sessionize_stream
-from tests.conftest import SF_ORACLE, no_data_batches_off
-
-
-def test_stateful_stream_sessions_match_batch(spark, tmp_path):
-    src = str(tmp_path / "events")
-    ev = (
-        load_table(spark, SF_ORACLE, "events")
-        .select("user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id")
-        .filter(F.col("user_id") < 20)
-    )
-    ev.write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 4).parquet(src)
-    )
-    with no_data_batches_off(spark):
-        q = (
-            sessionize_stream(stream, gap_minutes=30)
-            .writeStream.format("memory")
-            .queryName("sessions")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    assert q.awaitTermination(180)
-    got = spark.sql("SELECT * FROM sessions").toPandas()
-
-    # batch truth: closed sessions = all sessions except each user's last
-    batch = sessionize(ev, "user_id", "ts", "event_id", 30)
-    per = (
-        batch.groupBy("user_id", "session_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .toPandas()
-    )
-    last = per.groupby("user_id").session_id.max().rename("last_sid")
-    per = per.join(last, on="user_id")
-    closed = per[per.session_id < per.last_sid]
-
-    got_k = {
-        (r.user_id, r.session_id): r.n_events for r in got.itertuples(index=False)
-    }
-    want_k = {
-        (r.user_id, r.session_id): r.n_events for r in closed.itertuples(index=False)
-    }
-    # the streaming operator must emit exactly the batch-closed sessions
-    # (final open sessions stay in state until timeout)
-    assert got_k == want_k
-    assert len(got_k) > 0
+from tests.conftest import SF_ORACLE
 
 
 def test_ivf_recall_and_pruning(spark):

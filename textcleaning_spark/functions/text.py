@@ -1,9 +1,13 @@
 """Core text expressions, defined for BOTH engines.
 
-Every helper here has a Spark form (returns a ``Column``) and a SQL form
-(returns a DuckDB SQL fragment string). The driver's correctness gate
-compares each Spark query against a DuckDB oracle on the same parquet —
-generating both sides from one module guarantees identical semantics.
+The ``*_sql`` helpers return DuckDB SQL fragments: the oracle side of
+the driver's correctness gate, which compares each Spark query against
+DuckDB on the same parquet. The Spark forms here (each returns a
+``Column``) are the shared building blocks: tokens, lines, counts and
+word pairs. The per-document quality signals and the keep verdict are
+computed in Spark by ``operators/quality.score_documents`` from one
+tokenization; their SQL twins stay here, next to the building blocks
+they mirror.
 
 All of these are *native* expressions (whole-stage codegen'd JVM work,
 no Python in the hot path) — the reference's row-wise ``Series.apply``
@@ -91,11 +95,6 @@ def char_count_no_spaces_sql(col: str) -> str:
     return f"length(replace({col}, ' ', ''))::BIGINT"
 
 
-def mean_word_len(col: Column | str) -> Column:
-    nw = n_words(col)
-    return F.when(nw > 0, char_count_no_spaces(col).cast("double") / nw)
-
-
 def mean_word_len_sql(col: str) -> str:
     return (
         f"CASE WHEN {n_words_sql(col)} > 0 THEN "
@@ -114,11 +113,6 @@ def is_stop_word(tok: Column) -> Column:
     as an ``InSet`` hash probe; ``array_contains`` on a literal array
     would scan all 100 words per token."""
     return F.lower(tok).isin(*STOP_WORDS)
-
-
-def stop_word_count(col: Column | str) -> Column:
-    """Count of tokens (not distinct) that are stop words (P9 signal)."""
-    return F.size(F.filter(tokens(col), is_stop_word)).cast("bigint")
 
 
 def stop_word_count_sql(col: str) -> str:
@@ -149,29 +143,12 @@ def substr_count_sql(col: str, sub: str) -> str:
     )
 
 
-def symbol_to_word_ratio(col: Column | str) -> Column:
-    """Gopher rule: (# of '#' chars + '...' occurrences) / n_words."""
-    nw = n_words(col)
-    syms = substr_count(col, "#") + substr_count(col, "...")
-    return F.when(nw > 0, syms.cast("double") / nw).otherwise(F.lit(None))
-
-
 def symbol_to_word_ratio_sql(col: str) -> str:
     return (
         f"CASE WHEN {n_words_sql(col)} > 0 THEN "
         f"({substr_count_sql(col, '#')} + {substr_count_sql(col, '...')})::DOUBLE "
         f"/ {n_words_sql(col)} END"
     )
-
-
-def alpha_word_frac(col: Column | str) -> Column:
-    """Fraction of tokens containing at least one letter — \\p{L}, any
-    Unicode script (ASCII-only [A-Za-z] would flag every clean
-    Hangul/Han document as non-alpha). Same class in Java regex and
-    DuckDB's RE2."""
-    nw = n_words(col)
-    alpha = F.size(F.filter(tokens(col), lambda x: x.rlike(r"\p{L}")))
-    return F.when(nw > 0, alpha.cast("double") / nw).otherwise(F.lit(None))
 
 
 def alpha_word_frac_sql(col: str) -> str:
@@ -191,16 +168,6 @@ def lines_sql(col: str) -> str:
     return f"list_filter(string_split({col}, chr(10)), x -> x <> '')"
 
 
-def dup_line_frac(col: Column | str) -> Column:
-    """Fraction of non-unique lines — boilerplate-repetition rule."""
-    ls = lines(col)
-    n = F.size(ls)
-    return F.when(
-        n > 0,
-        (n - F.size(F.array_distinct(ls))).cast("double") / n,
-    ).otherwise(F.lit(0.0))
-
-
 def dup_line_frac_sql(col: str) -> str:
     ls = lines_sql(col)
     return (
@@ -210,13 +177,6 @@ def dup_line_frac_sql(col: str) -> str:
     )
 
 
-def ellipsis_line_frac(col: Column | str) -> Column:
-    ls = lines(col)
-    n = F.size(ls)
-    ell = F.size(F.filter(ls, lambda x: x.endswith("...")))
-    return F.when(n > 0, ell.cast("double") / n).otherwise(F.lit(0.0))
-
-
 def ellipsis_line_frac_sql(col: str) -> str:
     ls = lines_sql(col)
     return (
@@ -224,19 +184,6 @@ def ellipsis_line_frac_sql(col: str) -> str:
         f"len(list_filter({ls}, x -> suffix(x, '...')))::DOUBLE / len({ls}) "
         f"ELSE 0.0 END"
     )
-
-
-def word_2grams(col: Column | str) -> Column:
-    """Adjacent word-pair array (space-joined); empty below 2 tokens —
-    the guard also avoids sequence()'s descending default."""
-    toks = tokens(col)
-    return F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(2))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def word_2gram_pairs(toks: Column) -> Column:
@@ -256,18 +203,6 @@ def word_2gram_pairs(toks: Column) -> Column:
     ).otherwise(empty)
 
 
-def dup_ngram_frac(col: Column | str) -> Column:
-    """Fraction of non-unique word 2-grams — the Gopher-style
-    repetition rule (north_star: 'repetition n-gram ratio'). Catches
-    phrase-level boilerplate that line-dedup misses (repeated slogans
-    inside one line, templated spans)."""
-    grams = word_2grams(col)
-    n = F.size(grams)
-    return F.when(
-        n > 0, (n - F.size(F.array_distinct(grams))).cast("double") / n
-    ).otherwise(F.lit(0.0))
-
-
 def dup_ngram_frac_sql(col: str) -> str:
     toks = tokens_sql(col)
     grams = (
@@ -285,23 +220,6 @@ def dup_ngram_frac_sql(col: str) -> str:
 # document keep/drop verdict (Gopher/C4-style; generalizes the reference's
 # word-level idf_rank>=K ∧ pos∈pass rule to documents)
 # ---------------------------------------------------------------------------
-
-
-def keep_expr(col: Column | str, cfg: QualityConfig | None = None) -> Column:
-    cfg = cfg or QualityConfig()
-    nw = n_words(col)
-    return (
-        (nw >= cfg.min_words)
-        & (nw <= cfg.max_words)
-        & (mean_word_len(col) >= cfg.min_mean_word_len)
-        & (mean_word_len(col) <= cfg.max_mean_word_len)
-        & (symbol_to_word_ratio(col) <= cfg.max_symbol_to_word_ratio)
-        & (stop_word_count(col) >= cfg.min_stop_word_count)
-        & (dup_line_frac(col) <= cfg.max_dup_line_frac)
-        & (dup_ngram_frac(col) <= cfg.max_dup_ngram_frac)
-        & (alpha_word_frac(col) >= cfg.min_alpha_word_frac)
-        & (ellipsis_line_frac(col) <= cfg.max_ellipsis_line_frac)
-    )
 
 
 def keep_expr_sql(col: str, cfg: QualityConfig | None = None) -> str:

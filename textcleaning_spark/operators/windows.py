@@ -1,4 +1,4 @@
-"""Event-time windowing + sessionization (SURVEY.md §2.5 W3, §2.9).
+"""Event-time sliding windows (SURVEY.md §2.5 W3).
 
 The reference's sliding 5-year animation windows
 (text_process_v3.py:183-193) recompute the full pipeline once per
@@ -10,7 +10,7 @@ sliding window aggregation (streaming/ has the readStream variant).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -38,41 +38,3 @@ def sliding_window_agg(
             .alias("total_value")
         )
     return exploded.groupBy("win_start").agg(*aggs)
-
-
-def sessionize(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    id_col: str,
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the gap from
-    the previous event exceeds ``gap_minutes``. Deterministic order
-    (ts, id). Batch twin of applyInPandasWithState sessionization."""
-    w = Window.partitionBy(user_col).orderBy(F.col(ts_col), F.col(id_col))
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    new_session = (
-        prev_ts.isNull()
-        | (
-            F.col(ts_col).cast("long") - prev_ts.cast("long")
-            > gap_minutes * 60
-        )
-    ).cast("int")
-    return df.withColumn(
-        "session_id",
-        F.sum(new_session).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ).cast("bigint"),
-    )
-
-
-def session_stats(sessions: DataFrame, user_col: str) -> DataFrame:
-    """Per-user session rollup: session count + longest session size."""
-    per_session = sessions.groupBy(user_col, "session_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events")
-    )
-    return per_session.groupBy(user_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
-        F.max("n_events").alias("max_session_events"),
-    )

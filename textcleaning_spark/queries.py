@@ -738,7 +738,7 @@ def cooccurrence_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Batch 2: windows/sessions, relational joins, dedup, similarity, scrub
+# Batch 2: windows, dedup, similarity, scrub
 # ===========================================================================
 from textcleaning_spark.config import ScrubConfig
 from textcleaning_spark.functions import stemmer
@@ -775,97 +775,6 @@ def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = win.sliding_window_agg(ev.select("ts", "value"), "ts", 7, "value")
     return out.select(
         F.col("win_start").cast("date").alias("win_start"), "n_events", "total_value"
-    )
-
-
-# ---------------------------------------------------------------------------
-# 12. Gap-based sessionization (streaming-shaped stateful op, batch twin)
-# ---------------------------------------------------------------------------
-@register(
-    "user_sessions",
-    """
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-        SELECT user_id,
-               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING)::BIGINT AS session_id
-        FROM flagged
-    ),
-    per AS (
-        SELECT user_id, session_id, count(*)::BIGINT AS n_events
-        FROM sess GROUP BY 1, 2
-    )
-    SELECT user_id, count(*)::BIGINT AS n_sessions, max(n_events) AS max_session_events
-    FROM per GROUP BY user_id
-    """,
-)
-def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization with a 30-minute gap: lag + running sum windows.
-    (Streaming variant: applyInPandasWithState in streaming/.)"""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
-    prev = F.lag("ts").over(w)
-    new_s = (
-        prev.isNull()
-        | (F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(prev.cast("timestamp")) > 1_800_000_000)
-    ).cast("int")
-    sess = ev.withColumn(
-        "session_id",
-        F.sum(new_s)
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("bigint"),
-    )
-    per = sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events")
-    )
-    return per.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
-        F.max("n_events").alias("max_session_events"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 14. Multi-join revenue rollup (broadcast dims over fact)
-# ---------------------------------------------------------------------------
-@register(
-    "revenue_by_nation",
-    """
-    SELECT n_name, r_name,
-           count(*)::BIGINT AS n_orders,
-           (sum(o_totalprice::DECIMAL(12,2)))::DOUBLE AS revenue
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY n_name, r_name
-    """,
-)
-def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star join: fact(orders) ⋈ broadcast dims. Catalyst broadcasts
-    customer/nation/region automatically (all far under the threshold),
-    so the fact table never shuffles before aggregation."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name", "r_name")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(12,2)"))
-            .cast("double")
-            .alias("revenue"),
-        )
     )
 
 
@@ -1185,10 +1094,9 @@ def stem_surface_forms(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     (P7 len>1, P9 stop words, P8 stop-POS lv1, F12 array_join)
 # ---------------------------------------------------------------------------
 from textcleaning_spark.config import STOP_WORDS as _SW
-from textcleaning_spark.config import stop_pos as _sp
 
 _SW_SQL = ", ".join(f"'{w}'" for w in _SW)
-_STOP1_SQL = ", ".join(f"'{t}'" for t in _sp(1))
+_STOP1_SQL = ", ".join(f"'{t}'" for t in stop_pos(1))
 
 
 @register(
@@ -1219,7 +1127,7 @@ def cleaned_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.tokens("text"),
         lambda t: (F.length(t) > 1)
         & ~F.array_contains(stop_arr, F.lower(t))
-        & ~tagger.tag_word(t).isin(*_sp(1)),
+        & ~tagger.tag_word(t).isin(*stop_pos(1)),
     )
     return docs.select(
         "doc_id",
@@ -1229,7 +1137,7 @@ def cleaned_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Batch 3: set ops, semi/anti joins, descriptive stats, JSON, SimHash, LSH
+# Batch 3: set ops, semi/anti joins, descriptive stats, SimHash, LSH
 # ===========================================================================
 
 
@@ -1390,29 +1298,6 @@ def event_day_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(F.format_string("[%d]", day_num).alias("day_label"))
         .groupBy("day_label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# 28. JSON property extraction (events.props) — semi-structured source
-# ---------------------------------------------------------------------------
-@register(
-    "event_props_stats",
-    """
-    SELECT event_type,
-           sum(json_extract(props, '$.k')::BIGINT)::BIGINT AS k_sum,
-           count(*)::BIGINT AS n_events
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def event_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON column handling: get_json_object pushdown-friendly scalar
-    extraction, aggregated per event type."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.sum(F.get_json_object(F.col("props"), "$.k").cast("bigint")).alias("k_sum"),
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
     )
 
 
@@ -1625,68 +1510,8 @@ def idf_alpha_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Batch 4: as-of join, shingle near-dup, subtoken counts, fingerprints
+# Batch 4: shingle near-dup, subtoken counts, fingerprints
 # ===========================================================================
-from textcleaning_spark.operators.asof import asof_join
-
-
-# ---------------------------------------------------------------------------
-# 33. As-of join: each event ↔ latest order at-or-before it (custom op)
-# ---------------------------------------------------------------------------
-@register(
-    "asof_event_orders",
-    """
-    WITH tagged AS (
-        SELECT user_id AS k, ts, 1 AS is_left, event_id AS tie,
-               NULL::BIGINT AS rpay
-        FROM events
-        UNION ALL
-        SELECT o_custkey AS k, o_orderdate AS ts, 0 AS is_left,
-               o_orderkey AS tie, o_orderkey AS rpay
-        FROM orders
-    ),
-    carried AS (
-        SELECT k, is_left,
-               last_value(rpay IGNORE NULLS) OVER (
-                   PARTITION BY k ORDER BY ts, is_left, tie
-                   ROWS UNBOUNDED PRECEDING) AS asof_o_orderkey
-        FROM tagged
-    )
-    SELECT k AS user_id,
-           count(*)::BIGINT AS n_events,
-           count(asof_o_orderkey)::BIGINT AS n_matched,
-           max(asof_o_orderkey) AS max_order
-    FROM carried WHERE is_left = 1
-    GROUP BY k
-    """,
-)
-def asof_event_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join (events → latest preceding order of the same
-    user), then per-user match stats. One shuffle on the key; no
-    range-explosion (operators/asof.py)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
-    )
-    # asof_join keys on a shared column NAME — align orders' key to it
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
-    )
-    joined = asof_join(
-        ev, orders,
-        key="user_id",
-        left_ts="ts", right_ts="o_orderdate",
-        right_payload="o_orderkey", left_tiebreak="event_id",
-    )
-    return (
-        joined.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.count("asof_o_orderkey").cast("bigint").alias("n_matched"),
-            F.max("asof_o_orderkey").alias("max_order"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1906,46 +1731,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline; the LSH/IVF operators are the 100 TB path."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sim.cosine_near_dup_pairs(emb, "vec_id", "embedding", _COS_T)
-
-
-# ---------------------------------------------------------------------------
-# 38. lead / lag / running frames over events (W4 rowsBetween)
-# ---------------------------------------------------------------------------
-@register(
-    "events_lead_lag",
-    """
-    SELECT user_id, event_id,
-           (epoch_us(ts) - lag(epoch_us(ts)) OVER w)::BIGINT AS gap_us,
-           row_number() OVER w AS run_n,
-           sum(floor(value * 100)::BIGINT) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           )::BIGINT AS run_cents,
-           lead(event_type) OVER w AS next_type
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-)
-def events_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4 frame coverage: lag gap, running count, running integer sum
-    (floor(value*100) so the accumulation is exact in both engines —
-    double window sums are order-sensitive), and lead. Partitioned by
-    user_id: the shuffle key is the natural entity key, so the window
-    never needs a global sort."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return ev.select(
-        "user_id",
-        "event_id",
-        (us - F.lag(us).over(w)).cast("bigint").alias("gap_us"),
-        F.row_number().over(w).cast("bigint").alias("run_n"),
-        F.sum(F.floor(F.col("value") * 100).cast("bigint")).over(frame)
-        .cast("bigint")
-        .alias("run_cents"),
-        F.lead("event_type").over(w).alias("next_type"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2229,121 +2014,6 @@ def char_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.exp(-F.avg(lp)), 4).alias("ppl"),
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 48. Multimodal feature-extraction profile (rows-only driver check)
-# ---------------------------------------------------------------------------
-def media_feature_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media columns → mapInPandas REAL decode (pure-numpy BMP /
-    PNG (zlib inflate + scanline unfilter) / baseline JPEG (Annex K
-    Huffman + IDCT, multimodal/jpeg.py) / PCM-WAV / raw-frames codecs /
-    MP4 ISO BMFF metadata box walk (multimodal/mp4.py)) → feature
-    kernel → per-kind profile; generated images rotate BMP/PNG/JPEG
-    and videos rotate RAWVID01/MP4 so every real codec flows through.
-    MP4 frame decode and MP3 remain the documented ffmpeg integration
-    point (metadata is real; coded frames stay opaque).
-
-    The codec invariants are asserted IN-QUERY (the ann_recall gate
-    pattern): every feature vector must be exactly 8-dim, each kind
-    must decode all 100 of its generated payloads, the 8th feature is
-    a kind marker (1=image, 2=audio, 3=video) that must agree on every
-    row, and f0 (width / seconds / frame-or-sample count — equal
-    across the two video containers by construction, so rotation
-    cannot move sum_f0) must be positive. A codec regression makes
-    that kind's row vanish, so the driver's rows-only check (3 rows ==
-    all invariants hold) catches it."""
-    from textcleaning_spark.multimodal.media import extract_features, generate_media
-
-    media = generate_media(spark, 300, seed=11, video_mp4_rotation=True)
-    feats = extract_features(media, mode="real")
-    expected_marker = (
-        F.when(F.col("kind") == "image", 1.0)
-        .when(F.col("kind") == "audio", 2.0)
-        .otherwise(3.0)
-    )
-    return (
-        feats.select(
-            "kind",
-            F.element_at("features", 1).alias("f0"),
-            F.element_at("features", 8).alias("marker"),
-            F.size("features").alias("dim"),
-        )
-        .groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.round(F.sum("f0"), 6).alias("sum_f0"),
-            F.max("dim").cast("bigint").alias("feature_dim"),
-            F.min("dim").cast("bigint").alias("__min_dim"),
-            F.min("f0").alias("__min_f0"),
-            F.min("marker").alias("__min_marker"),
-            F.max("marker").alias("__max_marker"),
-        )
-        .filter(
-            (F.col("feature_dim") == 8)
-            & (F.col("__min_dim") == 8)
-            & (F.col("n_media") == 100)
-            & (F.col("__min_f0") > 0)
-            & (F.col("__min_marker") == expected_marker)
-            & (F.col("__max_marker") == expected_marker)
-        )
-        .select("kind", "n_media", "sum_f0", "feature_dim")
-    )
-
-
-_QUERIES["media_feature_profile"] = media_feature_profile
-
-
-# ---------------------------------------------------------------------------
-# 49. Range (point-in-interval) join: events inside purchase follow-up windows
-# ---------------------------------------------------------------------------
-_RANGE_HOURS = 2
-
-
-@register(
-    "events_in_purchase_windows",
-    f"""
-    SELECT p.event_type,
-           count(*)::BIGINT AS n_matches,
-           count(DISTINCT p.event_id)::BIGINT AS n_events,
-           count(DISTINCT w.event_id)::BIGINT AS n_windows
-    FROM events p
-    JOIN events w
-      ON p.user_id = w.user_id
-     AND w.event_type = 'purchase'
-     AND p.event_type IN ('click', 'view', 'error')
-     AND p.ts >= w.ts
-     AND p.ts < w.ts + INTERVAL {_RANGE_HOURS} HOUR
-    GROUP BY p.event_type
-    """,
-)
-def events_in_purchase_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-interval range join (operators/ranges.py): each
-    click/view/error matched to every [purchase, +2h) window of the
-    same user. The operator equi-joins on (key, time bucket) with the
-    interval replicated per spanned bucket, so the shuffle never sees
-    an unbounded per-key pair space."""
-    from textcleaning_spark.operators.ranges import range_join_point_in_interval
-
-    ev = load_table(spark, sf_dir, "events")
-    points = ev.filter(
-        F.col("event_type").isin("click", "view", "error")
-    ).select("event_id", "user_id", "ts", "event_type")
-    windows = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("w_start"),
-        (F.col("ts") + F.expr(f"INTERVAL {_RANGE_HOURS} HOURS")).alias("w_end"),
-    )
-    joined = range_join_point_in_interval(
-        points, windows, key="user_id", ts="ts", start="w_start", end="w_end",
-        bucket_seconds=3600,  # < window length: exercises interval replication
-    )
-    return joined.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_matches"),
-        F.countDistinct("event_id").cast("bigint").alias("n_events"),
-        F.countDistinct("window_id").cast("bigint").alias("n_windows"),
     )
 
 
@@ -2657,9 +2327,6 @@ def boilerplate_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 56. Per-rule hit metrics (north_rule: "rule-hit metrics" audit table)
 # ---------------------------------------------------------------------------
-_QCFG = QualityConfig()
-
-
 def _r6(frag: str) -> str:
     return f"round({frag}, 6)"
 
@@ -2809,52 +2476,6 @@ def span_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("contamination"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 59. Q18-shape: large-volume orders (HAVING-derived semi-join)
-# ---------------------------------------------------------------------------
-@register(
-    "large_volume_orders",
-    """
-    WITH big AS (
-        SELECT l_orderkey
-        FROM lineitem
-        GROUP BY l_orderkey
-        HAVING sum(l_quantity) > 300
-    )
-    SELECT o.o_orderkey, o.o_custkey, o.o_totalprice,
-           sum(l.l_quantity)::BIGINT AS total_qty
-    FROM orders o
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
-    GROUP BY o.o_orderkey, o.o_custkey, o.o_totalprice
-    """,
-)
-def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total quantity exceeds a
-    threshold, with the order details re-joined. The HAVING aggregate
-    becomes a left-semi join; the pre-agg, the semi-join and the final
-    agg all hash on l_orderkey/o_orderkey so the exchange layout is
-    reused end to end (same discipline as sole_late_supplier).
-    l_quantity values are integral, so sum > 300 and the BIGINT output
-    are exact in both engines."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("__qty"))
-        .filter(F.col("__qty") > 300)
-        .select("l_orderkey")
-    )
-    return (
-        o.join(big, o["o_orderkey"] == big["l_orderkey"], "left_semi")
-        .join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy("o_orderkey", "o_custkey", "o_totalprice")
-        .agg(F.sum("l_quantity").cast("bigint").alias("total_qty"))
     )
 
 
@@ -3270,51 +2891,6 @@ def token_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         cum.cast("bigint").alias("cum_tokens"),
         F.round(cum.cast("double") / tot.cast("double"), 6).alias("cum_token_frac"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 69. Discount-revenue forecast (TPC-H Q6 shape): the pure-pushdown
-#     aggregate — every predicate reaches the parquet scan.
-# ---------------------------------------------------------------------------
-@register(
-    "discount_revenue_forecast",
-    """
-    SELECT count(*)::BIGINT AS n_items,
-           (sum((l_extendedprice::DECIMAL(12,2))
-                * (l_discount::DECIMAL(12,2))))::DOUBLE AS revenue_delta
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate <  TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def discount_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6 shape: "how much revenue would vanish if these discounts were
-    dropped" — a scan-only aggregate with zero joins. Its entire value
-    is the plan: all four range predicates sit on base columns, so they
-    push into the parquet reader (PushedFilters + row-group statistics
-    skipping — at 100 TB on shipdate-partitioned data the date range
-    also prunes partitions), and the surviving rows fold into one
-    partial-agg-then-single-exchange plan. Discount values are exact
-    2-decimal doubles read identically by both engines, so the BETWEEN
-    boundary is deterministic."""
-    li = load_table(spark, sf_dir, "lineitem")
-    delta = F.col("l_extendedprice").cast("decimal(12,2)") * F.col(
-        "l_discount"
-    ).cast("decimal(12,2)")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            F.sum(delta).cast("double").alias("revenue_delta"),
-        )
     )
 
 
@@ -3900,10 +3476,10 @@ def pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary/document accounting the reference logs manually
     (sna_analysis.py:162-168), promoted to a first-class query."""
     docs = load_table(spark, sf_dir, "documents")
-    # keep/tok via the single-tokenize score_documents shape — the naive
-    # keep_expr tree re-splits the text ~10× per row (measured 11.2 s vs
-    # ~3 s for this query at sf0.1); verdict semantics are identical
-    # (same unrounded ratios), so the keep_expr_sql oracle is unchanged.
+    # keep/tok via the single-tokenize score_documents shape — deriving
+    # each signal from the raw text re-splits it ~10× per row (measured
+    # 11.2 s vs ~3 s for this query at sf0.1); verdict semantics are
+    # identical (same unrounded ratios) to the keep_expr_sql oracle.
     per = (
         q.score_documents(docs.select("text"), "text", _QCFG)
         .select(

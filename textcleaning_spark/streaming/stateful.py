@@ -1,18 +1,17 @@
-"""Custom stateful streaming operator: gap-based sessionization with
-``applyInPandasWithState`` (SURVEY.md §2.9; the streaming twin of
-operators/windows.sessionize).
+"""Custom stateful streaming operator: streaming near-dup flagging with
+``applyInPandasWithState`` (SURVEY.md §2.9).
 
-State per user: (session_id, last_ts, n_events). A new event either
-extends the current session or (gap > threshold) closes it and opens
-the next. Timed-out state emits the final session row — so the
-operator produces one row per CLOSED session, exactly-once under
-checkpointing.
+State per MinHash-LSH band bucket: the first-seen doc id. Every later
+arrival in the bucket is flagged with that id; a bucket idle past its
+processing-time TTL is evicted, so state stays bounded by the recent
+traffic.
 
-Timeout flush: the processing-time timeout is max(gap, 1 s); when it
-fires (including the extra batch an availableNow drain runs before
-terminating, if the timeout has elapsed) the user's open session is
-emitted and its state removed — the stream flushes rather than
-stranding tail sessions.
+Termination: with ``ProcessingTimeTimeout`` state, Spark asks for a
+no-data micro-batch after every batch, so an ``availableNow`` run ends
+only when ``spark.sql.streaming.noDataMicroBatches.enabled=false`` (as
+``tests/conftest.no_data_batches_off`` sets it); otherwise the query
+stays active after its input is drained. With no-data batches off,
+timeouts fire only in data batches.
 """
 
 from __future__ import annotations
@@ -24,79 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    IntegerType, LongType, StringType, StructField, StructType, TimestampType,
+    IntegerType, LongType, StringType, StructField, StructType,
 )
-
-SESSION_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("closed", IntegerType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("session_id", LongType()),
-        StructField("last_ts_us", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-
-def make_session_fn(gap_minutes: int = 30):
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def session_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            session_id, last_ts, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [{"user_id": user_id, "session_id": session_id,
-                  "n_events": n, "closed": 1}]
-            )
-            return
-
-        session_id, last_ts, n = state.get if state.exists else (1, None, 0)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts in pdf["ts"]:
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if last_ts is not None and ts_us - last_ts > gap_us:
-                    out.append(
-                        {"user_id": user_id, "session_id": session_id,
-                         "n_events": n, "closed": 1}
-                    )
-                    session_id += 1
-                    n = 0
-                last_ts = ts_us
-                n += 1
-        state.update((session_id, last_ts, n))
-        # timeout must be strictly positive; clamp for tiny/zero gaps
-        state.setTimeoutDuration(max(gap_us // 1000, 1000))
-        if out:
-            yield pd.DataFrame(out)
-
-    return session_fn
-
-
-def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """events(user_id, ts, event_id) stream → closed-session rows."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            make_session_fn(gap_minutes),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
