@@ -1,18 +1,11 @@
-"""Multimodal plumbing (fake decode mode) + skew helper semantics."""
+"""Skew helper semantics on the real ``documents`` table, plus the
+length-bucket mapping. tests/test_skew.py covers the same helpers on
+synthetic skewed inputs."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
-from textcleaning_spark.multimodal.media import (
-    FEATURE_DIM,
-    extract_features,
-    generate_media,
-    resize_images,
-    sample_frames,
-)
 from textcleaning_spark.operators.skew import (
     length_bucket,
     repartition_by_length,
@@ -21,346 +14,6 @@ from textcleaning_spark.operators.skew import (
 )
 from textcleaning_spark.sources.registry import load_table
 from tests.conftest import SF_ORACLE
-
-
-def test_media_features_deterministic(spark):
-    media = generate_media(spark, 30, seed=9)
-    f1 = {r["media_id"]: list(r["features"]) for r in extract_features(media).collect()}
-    f2 = {r["media_id"]: list(r["features"]) for r in extract_features(media).collect()}
-    assert f1 == f2
-    assert all(len(v) == FEATURE_DIM for v in f1.values())
-    assert len(f1) == 30
-
-
-def test_codec_roundtrips():
-    """Pure-numpy codecs: encode→decode is exact for BMP (incl. row
-    padding at non-multiple-of-4 widths), WAV PCM16, and the RAWVID
-    frame container."""
-    import numpy as np
-
-    from textcleaning_spark.multimodal import media as M
-
-    rgb = (np.arange(21 * 10 * 3, dtype=np.uint32) % 251).astype(np.uint8)
-    rgb = rgb.reshape(10, 21, 3)  # width 21: rows need padding
-    assert (M.decode_bmp(M.encode_bmp(rgb)) == rgb).all()
-
-    samples = (np.sin(np.arange(1600) / 7.0) * 20000).astype(np.int16)
-    dec, rate = M.decode_wav(M.encode_wav(samples, 8000))
-    assert rate == 8000 and (dec == samples).all()
-
-    frames = [M.encode_bmp(rgb), M.encode_bmp(rgb[::-1].copy())]
-    assert M.decode_rawvid(M.encode_rawvid(frames)) == frames
-
-
-def test_real_features_content_derived(spark):
-    """mode='real' features come from actual decoded pixels/samples:
-    the image feature vector carries the true width/height and channel
-    means; audio carries duration and RMS of the sine."""
-    import numpy as np
-
-    from textcleaning_spark.multimodal import media as M
-
-    rgb = np.full((4, 6, 3), 200, dtype=np.uint8)
-    f = M._real_features(M.encode_bmp(rgb), "image/bmp")
-    assert f[:2] == [6.0, 4.0] and f[2] == f[3] == f[4] == 200.0
-
-    samples = (np.sin(2 * np.pi * 440 * np.arange(16000) / 16000) * 16384)
-    f = M._real_features(
-        M.encode_wav(samples.astype(np.int16), 16000), "audio/wav"
-    )
-    assert f[0] == 1.0 and f[1] == 16000.0
-    assert abs(f[2] - 0.3536) < 0.01  # RMS of a 0.5-amplitude sine
-
-
-def test_media_compressed_formats_raise(spark):
-    """MP4/MP3 METADATA parses for real now (box walk / frame-header
-    walk), so a structurally broken payload is a ValueError (defensive
-    parse), not a stub; codecs we genuinely can't reimplement (e.g.
-    Vorbis) stay an honest NotImplementedError. PNG and baseline JPEG
-    decode for real; progressive JPEG (SOF2) is a different entropy
-    layout and raises ValueError, not a wrong answer."""
-    from textcleaning_spark.multimodal.media import _real_features
-
-    with pytest.raises(ValueError):  # ftyp but no moov: rejected, not garbage
-        _real_features(b"\x00\x00\x00\x10ftypmp42\x00\x00\x00\x00", "video/mp4")
-    with pytest.raises(ValueError):  # ID3 header but no frame sync
-        _real_features(b"ID3\x04\x00\x00\x00\x00\x00\x00junk", "audio/mpeg")
-    with pytest.raises(NotImplementedError):
-        _real_features(b"OggS\x00\x02", "audio/ogg")
-
-    import numpy as np
-
-    from textcleaning_spark.multimodal import jpeg as J
-
-    good = J.encode_jpeg(np.full((8, 8, 3), 128, np.uint8))
-    progressive = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError):
-        J.decode_jpeg(progressive)
-
-
-def test_jpeg_roundtrip_and_structure():
-    """encode_jpeg emits a structurally valid baseline JFIF stream
-    (SOI, APP0-JFIF, 2 DQT, SOF0 with the true dims, 4 DHT, SOS, EOI)
-    and decode_jpeg recovers the pixels to PSNR ≥ 30 dB at quality 90
-    on non-multiple-of-8 dims, for BOTH 4:4:4 and 4:2:0; a flat image
-    is bit-exact (DCT of a constant block is pure DC)."""
-    import struct
-
-    import numpy as np
-
-    from textcleaning_spark.multimodal import jpeg as J
-
-    h, w = 45, 61
-    gy, gx = np.mgrid[0:h, 0:w]
-    rgb = np.stack(
-        [(gx * 4) % 256, (gy * 5) % 256, ((gx + gy) * 3) % 256], axis=-1
-    ).astype(np.uint8)
-
-    enc = J.encode_jpeg(rgb, quality=90)
-    assert enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"
-    assert enc[2:4] == b"\xff\xe0" and enc[6:11] == b"JFIF\x00"
-    assert enc.count(b"\xff\xdb") >= 2 and enc.count(b"\xff\xc4") >= 4
-    sof = enc.index(b"\xff\xc0")
-    sh, sw = struct.unpack_from(">HH", enc, sof + 5)
-    assert (sh, sw) == (h, w)
-
-    def psnr(a, b):
-        mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-        return 10 * np.log10(255**2 / mse) if mse else float("inf")
-
-    for subsample in (False, True):
-        dec = J.decode_jpeg(J.encode_jpeg(rgb, quality=90, subsample=subsample))
-        assert dec.shape == (h, w, 3)
-        assert psnr(rgb, dec) >= 30.0, f"subsample={subsample}"
-
-    flat = np.full((16, 24, 3), 137, np.uint8)
-    assert (J.decode_jpeg(J.encode_jpeg(flat, quality=90)) == flat).all()
-
-
-def test_jpeg_features_near_bmp_features():
-    """The same pixels through the lossy JPEG leg must produce the
-    same dims/marker exactly and channel means within quantization
-    tolerance of the lossless BMP leg — so the generator's three-way
-    codec rotation cannot move the profile aggregates (which only sum
-    f0 = width)."""
-    import numpy as np
-
-    from textcleaning_spark.multimodal import jpeg as J
-    from textcleaning_spark.multimodal import media as M
-
-    rgb = M._image_pixels(11, 8, 48, 32)
-    fb = M._real_features(M.encode_bmp(rgb), "image/bmp")
-    fj = M._real_features(J.encode_jpeg(rgb, quality=90), "image/jpeg")
-    assert fj[:2] == fb[:2] and fj[6] == fb[6] and fj[7] == fb[7]
-    for i in (2, 3, 4, 5):  # channel means + gray std
-        assert abs(fj[i] - fb[i]) < 2.0, (i, fb[i], fj[i])
-
-
-def test_png_roundtrip_and_filters():
-    """encode_png→decode_png is exact; the decoder also reconstructs
-    scanlines written with every RFC 2083 filter type (Sub/Up/Average/
-    Paeth forward-filtered by hand here, since the encoder emits only
-    filter 0)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from textcleaning_spark.multimodal import media as M
-
-    rng = np.random.default_rng(7)
-    rgb = rng.integers(0, 256, size=(9, 13, 3), dtype=np.uint8)
-    assert (M.decode_png(M.encode_png(rgb)) == rgb).all()
-
-    # forward-filter each row with filter type (row index mod 5)
-    h, w, ch = rgb.shape
-    flat = rgb.reshape(h, w * ch).astype(np.int32)
-    raw = bytearray()
-    prior = np.zeros(w * ch, np.int32)
-    for y in range(h):
-        f = y % 5
-        cur = flat[y]
-        px = cur.reshape(w, ch)
-        left = np.vstack([np.zeros(ch, np.int32), px[:-1]])  # a
-        up = prior.reshape(w, ch)  # b
-        ul = np.vstack([np.zeros(ch, np.int32), up[:-1]])  # c
-        if f == 0:
-            filt = cur
-        elif f == 1:
-            filt = (px - left).reshape(-1) % 256
-        elif f == 2:
-            filt = (cur - prior) % 256
-        elif f == 3:
-            filt = (px - ((left + up) >> 1)).reshape(-1) % 256
-        else:  # Paeth
-            p = left + up - ul
-            pa, pb, pc = np.abs(p - left), np.abs(p - up), np.abs(p - ul)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul)
-            )
-            filt = (px - pred).reshape(-1) % 256
-        raw.append(f)
-        raw.extend(filt.astype(np.uint8).tobytes())
-        prior = cur
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    png = (
-        M._PNG_SIG
-        + M._png_chunk(b"IHDR", ihdr)
-        + M._png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + M._png_chunk(b"IEND", b"")
-    )
-    assert (M.decode_png(png) == rgb).all()
-
-
-def test_png_features_equal_bmp_features():
-    """The same pixels produce the same real features through either
-    image codec — so the generator's BMP/PNG alternation cannot change
-    any aggregate."""
-    import numpy as np
-
-    from textcleaning_spark.multimodal import media as M
-
-    rgb = (np.arange(6 * 8 * 3, dtype=np.uint32) % 256).astype(np.uint8)
-    rgb = rgb.reshape(6, 8, 3)
-    assert M._real_features(M.encode_bmp(rgb), "image/bmp") == M._real_features(
-        M.encode_png(rgb), "image/png"
-    )
-    # resize parity too: same resample through either codec
-    small_b = M.decode_bmp(M.resize_bmp(M.encode_bmp(rgb), "image/bmp", 4, 3))
-    small_p = M.decode_png(M.resize_bmp(M.encode_png(rgb), "image/png", 4, 3))
-    assert (small_b == small_p).all()
-
-
-def test_real_resize_resamples_pixels(spark):
-    """Real resize: nearest-neighbor of a gradient keeps corner values."""
-    import numpy as np
-
-    from textcleaning_spark.multimodal import media as M
-
-    rgb = np.zeros((8, 8, 3), dtype=np.uint8)
-    rgb[:4, :4] = 10
-    rgb[4:, 4:] = 240
-    small = M.decode_bmp(M.resize_bmp(M.encode_bmp(rgb), "image/bmp", 4, 4))
-    assert small.shape == (4, 4, 3)
-    assert small[0, 0, 0] == 10 and small[3, 3, 0] == 240
-
-
-def test_mp4_box_walk_roundtrip():
-    """encode_mp4 → parse_mp4 recovers duration, per-track handler /
-    codec fourcc / dims / sample rate / sample count, at BOTH full-box
-    versions (0: 32-bit times, 1: 64-bit) and through a 64-bit
-    largesize mdat header."""
-    import struct
-
-    from textcleaning_spark.multimodal.mp4 import encode_mp4, parse_mp4
-
-    for version in (0, 1):
-        b = encode_mp4(
-            3200,
-            video={"width": 320, "height": 240, "n_samples": 32},
-            audio={"sample_rate": 16000, "n_samples": 100},
-            mdat=b"\x00" * 64,
-            version=version,
-        )
-        m = parse_mp4(b)
-        assert m["brand"] == "isom" and m["duration_ms"] == 3200
-        vid, aud = m["tracks"]
-        assert (vid["handler"], vid["codec"]) == ("vide", "mp4v")
-        assert (vid["width"], vid["height"], vid["n_samples"]) == (320, 240, 32)
-        assert (aud["handler"], aud["codec"]) == ("soun", "mp4a")
-        assert (aud["sample_rate"], aud["n_samples"]) == (16000, 100)
-
-    # rewrite the mdat header to size==1 + 64-bit largesize
-    b = encode_mp4(1500, video={"width": 8, "height": 8, "n_samples": 15})
-    at = b.rindex(b"mdat") - 4
-    size = struct.unpack_from(">I", b, at)[0]
-    b64 = b[:at] + struct.pack(">I4sQ", 1, b"mdat", size + 8) + b[at + 8 :]
-    assert parse_mp4(b64)["duration_ms"] == 1500
-
-    for bad in (b"", b"\x00" * 24, b"\xff" * 100):
-        with pytest.raises(ValueError):
-            parse_mp4(bad)
-
-
-def test_mp3_frame_walk_roundtrip():
-    """encode_mp3_meta → parse_mp3 recovers frame count, duration,
-    rate, bitrate and channel mode across MPEG-1/MPEG-2, Layer III/II,
-    the padding-bit +1-slot length rule at 44100 Hz, an ID3v2 tag, a
-    truncated final frame, and trailing junk (stop, don't resync)."""
-    from textcleaning_spark.multimodal.mp3 import encode_mp3_meta, parse_mp3
-
-    b = encode_mp3_meta(50)  # MPEG-1 L3 48 kHz 128 kbps: 24 ms frames
-    assert parse_mp3(b) == {
-        "version": "1", "layer": 3, "bitrate_kbps": 128,
-        "sample_rate": 48000, "channels": 1, "n_frames": 50,
-        "duration_ms": 1200,
-    }
-    m = parse_mp3(encode_mp3_meta(30, sample_rate=44100, pad_every=3))
-    assert (m["n_frames"], m["sample_rate"]) == (30, 44100)
-    m = parse_mp3(
-        encode_mp3_meta(40, bitrate_kbps=64, sample_rate=16000, id3=b"\x00" * 300)
-    )
-    assert m["version"] == "2" and m["duration_ms"] == 40 * 576 * 1000 // 16000
-    m = parse_mp3(encode_mp3_meta(10, bitrate_kbps=192, sample_rate=44100,
-                                  layer=2, mono=False))
-    assert (m["layer"], m["channels"]) == (2, 2)
-    assert parse_mp3(b[:-100])["n_frames"] == 49  # truncated final frame
-    assert parse_mp3(b + b"TAGjunk")["n_frames"] == 50  # trailing tag
-    for bad in (b"", b"\x00" * 64, b"\xff\xff\xff\xff" + b"\x00" * 60):
-        with pytest.raises(ValueError):
-            parse_mp3(bad)
-
-    # the feature kernel path: real metadata features, audio marker
-    from textcleaning_spark.multimodal.media import _real_features
-
-    f = _real_features(b, "audio/mpeg")
-    assert f == [1.2, 48000.0, 128.0, 50.0, 1.0, 0.0, 0.0, 2.0]
-
-
-def test_mp4_features_real_and_rotation_invariant(spark):
-    """The MP4 leg's features carry the real parsed metadata, its f0
-    (declared sample count) equals the RAWVID leg's f0 (frame count)
-    for the same row, and the rotated generator decodes 100% of rows
-    in real mode — the property that keeps media_feature_profile's
-    aggregates container-invariant."""
-    from textcleaning_spark.multimodal import media as M
-
-    plain = {
-        r["media_id"]: r["features"][0]
-        for r in extract_features(generate_media(spark, 60, seed=11)).collect()
-    }
-    rotated_rows = extract_features(
-        generate_media(spark, 60, seed=11, video_mp4_rotation=True)
-    ).collect()
-    rotated = {r["media_id"]: r["features"][0] for r in rotated_rows}
-    assert rotated == plain  # f0 invariant under container rotation
-    assert len(rotated) == 60
-
-    mp4_rows = (
-        generate_media(spark, 60, seed=11, video_mp4_rotation=True)
-        .filter("mime = 'video/mp4'")
-        .collect()
-    )
-    assert mp4_rows, "rotation produced no MP4 rows"
-    f = M._real_features(bytes(mp4_rows[0]["payload"]), "video/mp4")
-    assert f[1] == 16.0 and f[2] == 12.0  # real parsed track dims
-    assert f[3] == mp4_rows[0]["duration_ms"] / 1000.0  # real mvhd duration
-    assert f[7] == 3.0  # video kind marker
-
-
-def test_frame_sampling_expands_rows(spark):
-    media = generate_media(spark, 30, seed=9)
-    frames = sample_frames(media, every_ms=1000)
-    n_videos = media.filter("kind = 'video'").count()
-    assert frames.count() >= n_videos  # ≥1 frame per video
-    assert frames.select("media_id").distinct().count() == n_videos
-
-
-def test_resize_rewrites_image_meta(spark):
-    media = generate_media(spark, 30, seed=9)
-    resized = resize_images(media, 128, 128)
-    imgs = resized.filter("kind = 'image'").select("width", "height").distinct().collect()
-    assert [(r["width"], r["height"]) for r in imgs] == [(128, 128)]
 
 
 def test_length_bucket_monotone(spark):
