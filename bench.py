@@ -2,13 +2,16 @@
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` — in fresh-JVM
-groups of ``$BENCH_GROUP_SIZE`` (default 15; 0 = one session) so
-late-session JIT/GC pressure can't skew per-query numbers across
-rounds — and prints ONE COMPACT JSON line:
+groups of ``GROUP_SIZE`` (15) queries so late-session JIT/GC pressure
+can't skew per-query numbers across rounds — and prints ONE COMPACT
+JSON line:
 
     {"metric": "headline_queries_total", "value": N, "unit": "sec",
-     "sf": ..., "cpus": ..., "n_queries": ..., "pipeline": {...},
-     "warc": {...}, "queries_file": "BENCH/bench_last.json"}
+     "sf": ..., "cpus": ..., "n_queries": ...,
+     "queries_file": "BENCH/bench_last.json"}
+
+Pipeline docs/s (parquet and WARC input) is perfbench's to measure:
+``perfbench/run.py`` runs both workloads with checked output.
 
 stdout stays ONE SHORT line by contract: the round driver records only
 a bounded tail of stdout, and round 4's per-query map outgrew it (the
@@ -103,12 +106,7 @@ HEADLINE = [
     "cc_luhn_scrub_audit",
 ]
 
-PIPELINE_DOCS = int(os.environ.get("BENCH_PIPELINE_DOCS", "200000"))
-WARC_DOCS = int(os.environ.get("BENCH_WARC_DOCS", "20000"))
-WARC_FILES = int(os.environ.get("BENCH_WARC_FILES", "32"))
-
-
-# One timing rule for every bench leg: the median of REPS timed calls
+# One timing rule for every query: the median of REPS timed calls
 # after WARMUPS untimed ones.
 WARMUPS = 2
 REPS = 5
@@ -141,20 +139,13 @@ def _measure(run) -> dict:
     }
 
 
-def _throughput(scored, n_docs: int) -> dict:
-    """Time noop writes of an already-built plan (py4j plan
-    construction is driver-side fixed cost, not engine throughput)."""
-    m = _measure(lambda: _noop(scored))
-    return {"n_docs": n_docs, **m, "docs_per_sec": round(n_docs / m["sec"], 1)}
-
-
-def run_queries(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, dict]:
+def run_queries(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
     """Per-query timing; each call re-plans the query, so the warmups
     also compile that plan's whole-stage codegen."""
     qs = Q.queries()
     return {
         name: _measure(lambda fn=qs[name]: _noop(fn(spark, sf_dir)))
-        for name in (names if names is not None else HEADLINE)
+        for name in names
     }
 
 
@@ -166,67 +157,12 @@ def write_pages_corpus(spark, n_docs: int, path: str, n_files: int = 64) -> None
     generate_pages(spark, n_docs, seed=1234, partitions=n_files).write.parquet(path)
 
 
-def pipeline_throughput(spark, n_docs: int) -> dict:
-    """read→pipeline→noop-write on a pre-written parquet corpus."""
-    from textcleaning_spark.plans.pipeline import run_quality_pipeline
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "pages")
-        write_pages_corpus(spark, n_docs, src)
-        return _throughput(run_quality_pipeline(spark.read.parquet(src)), n_docs)
-
-
-def write_warc_corpus(spark, n_docs: int, dirpath: str, n_files: int) -> None:
-    """Synthesize ``n_docs`` pages once and lay them out as ``n_files``
-    per-record-gzipped ``.warc.gz`` archives (the Common Crawl layout;
-    file = task unit). Only (url, warc_ts, html) enter the archives —
-    read_warc yields NULL text, so the timed pipeline pays the full
-    html-extraction branch, exactly how a fresh crawl enters the
-    engine. The one-time driver collect here is bench SETUP (archives
-    are written once and reused across reps), not the measured path."""
-    from textcleaning_spark.sources.pages import generate_pages
-    from textcleaning_spark.sources.warc import write_warc
-
-    rows = (
-        generate_pages(spark, n_docs, seed=4321, partitions=n_files)
-        .select("url", "warc_ts", "html")
-        .collect()
-    )
-    os.makedirs(dirpath, exist_ok=True)
-    per = (len(rows) + n_files - 1) // n_files
-    for i in range(n_files):
-        chunk = [
-            (r["url"], r["warc_ts"], bytes(r["html"]))
-            for r in rows[i * per : (i + 1) * per]
-        ]
-        if chunk:
-            write_warc(
-                os.path.join(dirpath, f"seg-{i:04d}.warc.gz"), chunk, compress=True
-            )
-
-
-def warc_throughput(spark, n_docs: int, n_files: int = WARC_FILES) -> dict:
-    """Crawl-native soak: .warc.gz archives → read_warc → html
-    extraction → keep verdict → noop write, timed like the parquet
-    pipeline. Reports docs/s so the WARC entry path has a headline
-    throughput number next to the parquet one."""
-    from textcleaning_spark.plans.pipeline import run_quality_pipeline
-    from textcleaning_spark.sources.warc import read_warc
-
-    with tempfile.TemporaryDirectory() as tmp:
-        write_warc_corpus(spark, n_docs, tmp, n_files)
-        scored = run_quality_pipeline(
-            read_warc(spark, os.path.join(tmp, "seg-*.warc.gz"))
-        )
-        return {"n_files": n_files, **_throughput(scored, n_docs)}
-
-
-# Queries per fresh JVM (0 = everything in one session). A 60-query
-# session accumulates JIT/code-cache/GC pressure that lands on whichever
-# queries run LAST — round 3's cross-round per-query comparison was
-# dominated by exactly that, not by plan changes. Bounded groups keep
+# Queries per fresh JVM. A 60-query session accumulates
+# JIT/code-cache/GC pressure that lands on whichever queries run LAST
+# — round 3's cross-round per-query comparison was dominated by
+# exactly that, not by plan changes. Bounded groups keep
 # per-query numbers comparable across rounds as the registry grows.
-BENCH_GROUP_SIZE = int(os.environ.get("BENCH_GROUP_SIZE", "15"))
+GROUP_SIZE = 15
 
 
 def _bench_group(sf_dir: str, cpus, names: list[str]) -> None:
@@ -244,8 +180,8 @@ def _run_grouped_queries(sf_dir: str, cpus) -> dict[str, dict]:
     import subprocess
 
     queries: dict[str, dict] = {}
-    for gi in range(0, len(HEADLINE), BENCH_GROUP_SIZE):
-        group = HEADLINE[gi : gi + BENCH_GROUP_SIZE]
+    for gi in range(0, len(HEADLINE), GROUP_SIZE):
+        group = HEADLINE[gi : gi + GROUP_SIZE]
         code = (
             "import sys; sys.path.insert(0, %r); "
             "from bench import _bench_group; _bench_group(%r, %r, %r)"
@@ -272,22 +208,7 @@ def run_bench(sf_dir: str, cpus: int | str) -> dict:
         n_cores = int(cpus)
     except (TypeError, ValueError):
         n_cores = os.cpu_count() or 8
-    if BENCH_GROUP_SIZE > 0:
-        queries = _run_grouped_queries(sf_dir, cpus)
-        spark = get_spark("bench", cores=cpus)
-        try:
-            pipe = pipeline_throughput(spark, PIPELINE_DOCS)
-            warc = warc_throughput(spark, WARC_DOCS)
-        finally:
-            spark.stop()
-    else:
-        spark = get_spark("bench", cores=cpus)
-        try:
-            queries = run_queries(spark, sf_dir)
-            pipe = pipeline_throughput(spark, PIPELINE_DOCS)
-            warc = warc_throughput(spark, WARC_DOCS)
-        finally:
-            spark.stop()
+    queries = _run_grouped_queries(sf_dir, cpus)
     total = round(sum(q["sec"] for q in queries.values()), 3)
     return {
         "metric": "headline_queries_total",
@@ -295,8 +216,6 @@ def run_bench(sf_dir: str, cpus: int | str) -> dict:
         "unit": "sec",
         "queries": queries,
         "sf": sf_dir,
-        "pipeline": pipe,
-        "warc": warc,
         "cpus": n_cores,
     }
 

@@ -15,22 +15,28 @@ Usage (cluster or local):
 The job reads a ``pages(url, warc_ts, html, text, lang)`` parquet/
 Iceberg table, runs extract → langid → heuristic rules → keep/drop →
 PII/toxicity scrub, and writes the cleaned table partitioned by
-lineage bucket plus a per-(bucket, lang) rule-hit metrics audit table.
-With ``--resume`` it anti-joins completed lineage buckets from the
-audit table and processes only pending work (plans/audit.py).
+lineage bucket plus a per-(bucket, lang) rule-hit metrics audit table,
+in one pass through ``plans/audit.run_resumable``: the corpus is
+scored once, written once and never cached. Every run skips the
+lineage buckets the audit table already records; ``--resume`` says
+that the audit table may already exist, and without it the job refuses
+to start over an earlier run's audit.
 
 ``--synthetic-docs N`` generates the deterministic synthetic corpus
 instead of reading ``--input`` (for smoke tests and soak runs; the
 generator is distributed via mapInPandas, no driver bottleneck).
 
-The final line on stdout is one JSON object with row counts — the
-same contract as bench.py, machine-checkable by the caller.
+The final line on stdout is one JSON object with row counts,
+machine-checkable by the caller: ``newly_processed`` is the rows this
+run wrote, and ``kept_total`` is ``sum(n_keep)`` over the stage's
+audit rows, i.e. the kept rows of every bucket written so far.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -39,20 +45,16 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--input", help="pages parquet directory")
     p.add_argument("--output", required=True, help="cleaned-table output dir")
     p.add_argument("--audit", required=True, help="audit/metrics table dir")
-    p.add_argument("--stage", default="quality_filter", help="audit stage name")
     p.add_argument(
         "--resume",
         action="store_true",
-        help="skip lineage buckets already recorded in the audit table",
+        help="continue an earlier run: its audit table may already exist",
     )
     p.add_argument(
         "--synthetic-docs",
         type=int,
         default=0,
         help="generate N synthetic pages instead of reading --input",
-    )
-    p.add_argument(
-        "--partitions", type=int, default=0, help="repartition input to N (0 = as-read)"
     )
     p.add_argument(
         "--line-dedup-min-docs",
@@ -96,6 +98,10 @@ def apply_line_dedup(pages, min_docs: int):
 
 def main(argv: list[str] | None = None) -> dict:
     args = parse_args(argv if argv is not None else sys.argv[1:])
+    if os.path.exists(args.audit) and not args.resume:
+        raise SystemExit(
+            f"{args.audit} holds an earlier run's audit; pass --resume to continue it"
+        )
     # getOrCreate picks up the conf provided by spark-submit (master,
     # executor sizing, shuffle partitions); only app-level defaults here.
     from pyspark.sql import SparkSession
@@ -106,60 +112,36 @@ def main(argv: list[str] | None = None) -> dict:
         .getOrCreate()
     )
 
+    from pyspark.sql import functions as F
+
     from textcleaning_spark.plans import audit
-    from textcleaning_spark.plans.pipeline import (
-        add_lineage_bucket,
-        metrics_table,
-        run_quality_pipeline,
-    )
+    from textcleaning_spark.plans.pipeline import run_quality_pipeline
 
     if args.synthetic_docs:
         from textcleaning_spark.sources.pages import generate_pages
 
-        pages = generate_pages(
-            spark, args.synthetic_docs, seed=1234, partitions=max(args.partitions, 8)
-        )
+        pages = generate_pages(spark, args.synthetic_docs, seed=1234, partitions=8)
     else:
         if not args.input:
             raise SystemExit("--input or --synthetic-docs is required")
         pages = spark.read.parquet(args.input)
-        if args.partitions:
-            pages = pages.repartition(args.partitions)
 
     if args.line_dedup_min_docs > 0:
         pages = apply_line_dedup(pages, args.line_dedup_min_docs)
 
     scored = run_quality_pipeline(pages)
-    if args.resume:
-        todo = audit.pending(scored, spark, args.audit, args.stage)
-    else:
-        todo = scored
-    # count + data write + metrics all consume `todo`: persist so the
-    # langid/scrub UDF stage runs once, spilling to disk if needed.
-    # (At full 10^12-doc scale: drop the persist, write the data first,
-    # and derive metrics/counts by reading back the just-written
-    # buckets — same audit contract, no cached intermediate.)
-    from pyspark import StorageLevel
-
-    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
-    n_new = todo.count()
-    if n_new > 0:
-        audit.write_stage(
-            todo,
-            spark,
-            args.output,
-            args.audit,
-            args.stage,
-            metrics=metrics_table(todo),
-        )
-    todo.unpersist()
-    n_keep = (
-        spark.read.parquet(args.output).filter("keep").count()
-        if n_new or args.resume
-        else 0
-    )
+    n_new = audit.run_resumable(scored, spark, args.output, args.audit)
+    n_keep = 0
+    if os.path.exists(args.audit):
+        n_keep = (
+            spark.read.format(audit.storage_format(spark))
+            .load(args.audit)
+            .filter(F.col("stage") == audit.STAGE)
+            .agg(F.sum("n_keep"))
+            .first()[0]
+        ) or 0
     summary = {
-        "stage": args.stage,
+        "stage": audit.STAGE,
         "newly_processed": n_new,
         "kept_total": n_keep,
         "resumed": bool(args.resume),

@@ -15,7 +15,7 @@ from textcleaning_spark.plans.audit import (
     run_resumable,
     write_stage,
 )
-from textcleaning_spark.plans.pipeline import run_quality_pipeline
+from textcleaning_spark.plans.pipeline import metrics_table, run_quality_pipeline
 from textcleaning_spark.sources.pages import generate_pages
 
 
@@ -24,12 +24,30 @@ def scored(spark):
     return run_quality_pipeline(generate_pages(spark, 200, seed=11, partitions=4))
 
 
+def _files(*roots: str) -> set[str]:
+    return {
+        os.path.join(d, f) for root in roots for d, _, fs in os.walk(root) for f in fs
+    }
+
+
+def _assert_audit_reconciles(spark, scored, out: str, audit: str, n_written: int):
+    """The audit rows are metrics_table rows that add up to the output."""
+    rows = spark.read.parquet(audit)
+    assert rows.columns == metrics_table(scored).columns + ["stage", "completed_at"]
+    n_docs, n_keep = rows.agg(F.sum("n_docs"), F.sum("n_keep")).first()
+    assert n_docs == n_written
+    assert n_keep == spark.read.parquet(out).filter("keep").count()
+
+
 def test_full_run_then_noop_resume(spark, scored, tmp_path):
     out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
     n1 = run_resumable(scored, spark, out, audit, "quality_filter")
     assert n1 == 200
+    _assert_audit_reconciles(spark, scored, out, audit, n1)
+    before = _files(out, audit)
     n2 = run_resumable(scored, spark, out, audit, "quality_filter")
     assert n2 == 0  # everything audited — nothing recomputed
+    assert _files(out, audit) == before  # no data file, no audit row added
     assert spark.read.parquet(out).count() == 200
 
 
@@ -48,6 +66,10 @@ def test_partial_crash_resume(spark, scored, tmp_path):
     n_resumed = run_resumable(scored, spark, out, audit, "quality_filter")
     assert n_resumed == 200 - n_first
     assert spark.read.parquet(out).count() == 200
+    _assert_audit_reconciles(spark, scored, out, audit, 200)
+    before = _files(out, audit)
+    assert run_resumable(scored, spark, out, audit, "quality_filter") == 0
+    assert _files(out, audit) == before
     done = completed_buckets(spark, audit, "quality_filter")
     assert done.count() == len(buckets)
     assert pending(scored, spark, audit, "quality_filter").count() == 0

@@ -13,6 +13,7 @@ import shutil
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -84,6 +85,15 @@ def test_spark_submit_run_and_resume(pyfiles_zip, tmp_path):
     ), os.listdir(out_dir)
     # audit table has per-(bucket, lang) metric rows
     assert any(f.endswith(".parquet") for f in os.listdir(audit_dir))
+    # kept_total comes from the audit table and must match the data
+    keep = pq.read_table(out_dir, columns=["keep"]).column("keep").to_pylist()
+    assert first["kept_total"] == sum(keep)
+    # without --resume the job refuses an existing audit table, before
+    # it starts Spark
+    from jobs.run_quality_filter import main
+
+    with pytest.raises(SystemExit, match="--resume"):
+        main(args)
 
     resumed = _submit(pyfiles_zip, args + ["--resume"], cwd=str(tmp_path))
     assert resumed["newly_processed"] == 0, "resume must find no pending buckets"
