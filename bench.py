@@ -478,7 +478,7 @@ def _emit(res: dict) -> None:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if "--scaling" in sys.argv:
         run_scaling(sf_dir, os.path.join(REPO, "BENCH", "BASELINE.md"))
     else:

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 
@@ -98,10 +97,6 @@ def apply_line_dedup(pages, min_docs: int):
 
 def main(argv: list[str] | None = None) -> dict:
     args = parse_args(argv if argv is not None else sys.argv[1:])
-    if os.path.exists(args.audit) and not args.resume:
-        raise SystemExit(
-            f"{args.audit} holds an earlier run's audit; pass --resume to continue it"
-        )
     # getOrCreate picks up the conf provided by spark-submit (master,
     # executor sizing, shuffle partitions); only app-level defaults here.
     from pyspark.sql import SparkSession
@@ -117,6 +112,10 @@ def main(argv: list[str] | None = None) -> dict:
     from textcleaning_spark.plans import audit
     from textcleaning_spark.plans.pipeline import run_quality_pipeline
 
+    if audit.path_exists(spark, args.audit) and not args.resume:
+        raise SystemExit(
+            f"{args.audit} holds an earlier run's audit; pass --resume to continue it"
+        )
     if args.synthetic_docs:
         from textcleaning_spark.sources.pages import generate_pages
 
@@ -132,7 +131,7 @@ def main(argv: list[str] | None = None) -> dict:
     scored = run_quality_pipeline(pages)
     n_new = audit.run_resumable(scored, spark, args.output, args.audit)
     n_keep = 0
-    if os.path.exists(args.audit):
+    if audit.path_exists(spark, args.audit):
         n_keep = (
             spark.read.format(audit.storage_format(spark))
             .load(args.audit)

@@ -75,6 +75,31 @@ def test_partial_crash_resume(spark, scored, tmp_path):
     assert pending(scored, spark, audit, "quality_filter").count() == 0
 
 
+def test_resume_with_file_uris(spark, scored, tmp_path):
+    """Output and audit given as ``file://`` URIs: the resume still
+    finds the audit, so the second run writes no second set of rows."""
+    out, audit = (tmp_path / "out").as_uri(), (tmp_path / "audit").as_uri()
+    assert run_resumable(scored, spark, out, audit) == 200
+    assert run_resumable(scored, spark, out, audit) == 0
+    assert spark.read.parquet(audit).agg(F.sum("n_docs")).first()[0] == 200
+
+
+def test_resume_filter_runs_below_langid(spark, scored, tmp_path):
+    """After a partial run, the done buckets leave the plan before the
+    langid Python stage (and so before scoring): a literal NOT IN
+    filter pushed down to the source, not an anti-join above it."""
+    out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
+    run_resumable(scored.filter(F.col("lineage_bucket") < 32), spark, out, audit)
+    p = pending(scored, spark, audit, "quality_filter")
+    lines = p._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert not any("LeftAnti" in ln for ln in lines)
+    python_at = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    filter_at = [i for i, ln in enumerate(lines) if "Filter NOT" in ln]
+    assert len(python_at) == 1 and len(filter_at) == 1, lines
+    assert filter_at[0] > python_at[0], "\n".join(lines)
+    assert p.count() == scored.filter(F.col("lineage_bucket") >= 32).count()
+
+
 def _files_per_bucket(out: str) -> dict[str, int]:
     return {
         d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(out, d)))

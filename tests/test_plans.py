@@ -6,7 +6,10 @@ bug even if results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 from textcleaning_spark import queries as Q
+from textcleaning_spark.config import DEFAULT_CONFIG
 from textcleaning_spark.plans.pipeline import run_quality_pipeline
 from textcleaning_spark.sources.pages import generate_pages
 from tests.conftest import SF_ORACLE
@@ -291,3 +294,19 @@ def test_linkgraph_edges_partial_agg(spark):
     p = plan_str(Q.queries()["host_link_graph"](spark, SF_ORACLE))
     assert p.count("Exchange hashpartitioning") == 1
     assert "partial_count" in p
+
+
+def test_pipeline_counts_each_scrub_rule_once(spark):
+    """The scrub chain is gated on the rule counts, not on a second
+    whole-document regex pass: no RLIKE on the text, and each rule
+    pattern is counted once — CollapseProject has not copied the
+    ``scrub_hits`` counts into ``scrubbed_text``'s gate."""
+    pages = generate_pages(spark, 100, seed=1, partitions=4)
+    p = plan_str(run_quality_pipeline(pages))
+    # the one RLIKE left is score_documents' per-token letter test
+    assert re.findall(r"RLIKE\([^,]*, ([^)]*)\)", p) == [r"\p{L}"], p
+    pats = [pat for _n, pat, _r in DEFAULT_CONFIG.scrub.rules]
+    pats += [rf"\b{t}\b" for t in DEFAULT_CONFIG.scrub.toxic_terms]
+    for pat in pats:
+        counted = re.findall(rf"regexp_extract_all\(text#\d+, {re.escape(pat)}, 0\)", p)
+        assert len(counted) == 1, pat

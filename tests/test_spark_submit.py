@@ -88,8 +88,7 @@ def test_spark_submit_run_and_resume(pyfiles_zip, tmp_path):
     # kept_total comes from the audit table and must match the data
     keep = pq.read_table(out_dir, columns=["keep"]).column("keep").to_pylist()
     assert first["kept_total"] == sum(keep)
-    # without --resume the job refuses an existing audit table, before
-    # it starts Spark
+    # without --resume the job refuses an existing audit table
     from jobs.run_quality_filter import main
 
     with pytest.raises(SystemExit, match="--resume"):

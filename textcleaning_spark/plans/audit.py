@@ -5,9 +5,9 @@ Reference analogue: incremental pickle dumps every 10,000 docs
 (text_process_v5.py:29-33). Here the unit of work is a STABLE lineage
 bucket (xxhash64(url) % N — invariant across runs and cluster sizes),
 and each completed bucket appends its per-(bucket, lang) metrics rows
-to the audit table. A killed job resumes by anti-joining pending
-buckets against the audit table — no recomputation of completed work,
-no reliance on task-level state.
+to the audit table. A killed job resumes by filtering out the buckets
+the audit table records — no recomputation of completed work, no
+reliance on task-level state.
 
 Iceberg note (round 3: capability-probed, not assumed): the layout is
 Iceberg-table-shaped (append-only audit + partitioned data). When the
@@ -24,8 +24,6 @@ read on both sides.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -58,12 +56,20 @@ def storage_format(spark: SparkSession) -> str:
     return "iceberg" if iceberg_available(spark) else "parquet"
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem its
+    scheme names: a plain local path, ``file://``, ``hdfs://`` and
+    ``s3a://`` all resolve the way Spark's own reads and writes do."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def completed_buckets(
     spark: SparkSession, audit_path: str, stage: str, fmt: str | None = None
 ) -> DataFrame:
     """Buckets already finished for ``stage`` (empty DF if no audit yet)."""
     fmt = fmt or storage_format(spark)
-    if not os.path.exists(audit_path):
+    if not path_exists(spark, audit_path):
         return spark.range(0).select(F.col("id").cast("int").alias("lineage_bucket"))
     audit = spark.read.format(fmt).load(audit_path)
     return (
@@ -81,9 +87,15 @@ def pending(
     fmt: str | None = None,
 ) -> DataFrame:
     """Resume predicate: keep only rows whose bucket has no audit row.
-    Broadcast anti-join — the audit side is ≤ N_LINEAGE_BUCKETS rows."""
-    done = completed_buckets(spark, audit_path, stage, fmt)
-    return df.join(F.broadcast(done), "lineage_bucket", "left_anti")
+
+    The done buckets (at most ``N_LINEAGE_BUCKETS`` ids) are collected
+    and enter the plan as one literal ``NOT lineage_bucket IN (...)``.
+    Catalyst pushes that filter through the langid Python stage to just
+    above the source, so a resumed run neither detects the language of
+    nor scores a done bucket's rows; a join against the audit table
+    sits above both and would not."""
+    done = [r[0] for r in completed_buckets(spark, audit_path, stage, fmt).collect()]
+    return df.filter(~F.col("lineage_bucket").isin(done)) if done else df
 
 
 def write_stage(

@@ -131,12 +131,16 @@ def run_quality_pipeline(
     out = detect_language(out)
     out = score_documents(out, "text", cfg.quality)
     out = drop_reasons(out, cfg.quality)
+    # counts first: the scrub chain is gated on them, so each pattern is
+    # counted once; the select restores the published column order
+    cols = out.columns
+    out = out.withColumn("scrub_hits", rule_hits(F.col("text"), cfg.scrub))
     out = out.withColumn(
         "scrubbed_text",
-        F.when(F.col("keep"), scrub_col(F.col("text"), cfg.scrub)).otherwise(
-            F.lit(None)
-        ),
-    ).withColumn("scrub_hits", rule_hits(F.col("text"), cfg.scrub))
+        F.when(
+            F.col("keep"), scrub_col(F.col("text"), cfg.scrub, F.col("scrub_hits"))
+        ).otherwise(F.lit(None)),
+    ).select(*cols, "scrubbed_text", "scrub_hits")
     out = add_lineage_bucket(out)
     return out.drop("html")
 

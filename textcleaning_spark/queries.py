@@ -742,6 +742,7 @@ def cooccurrence_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 from textcleaning_spark.config import ScrubConfig
 from textcleaning_spark.functions import stemmer
+from textcleaning_spark.functions.scrub import scrub_chain
 from textcleaning_spark.operators import dedup as dd
 from textcleaning_spark.operators import similarity as sim
 from textcleaning_spark.operators import windows as win
@@ -1023,15 +1024,6 @@ def _scrub_sql(col: str) -> str:
     return out
 
 
-def _scrub_col(col):
-    out = col
-    for _name, pat, rep in _SCRUB.rules:
-        out = F.regexp_replace(out, pat, rep)
-    for term in _SCRUB.toxic_terms:
-        out = F.regexp_replace(out, rf"\b{term}\b", _SCRUB.toxic_replacement)
-    return out
-
-
 @register(
     "scrub_parity",
     f"""
@@ -1047,7 +1039,7 @@ def scrub_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.md5(F.encode(_scrub_col(F.col("text")), "UTF-8")).alias("scrub_hash"),
+        F.md5(F.encode(scrub_chain(F.col("text"), _SCRUB), "UTF-8")).alias("scrub_hash"),
         F.regexp_count(F.col("text"), F.lit(r"\bspark\b")).cast("bigint").alias("tox_hits"),
     )
 
