@@ -16,6 +16,15 @@ Package layout:
     sources/    readers/writers + the synthetic `pages` generator
     plans/      end-to-end pipelines (quality filter, audit/resume)
     streaming/  Structured Streaming variants of the batch stages
+    pyworker    per-task Python-worker start-up cost (installed on import)
+
+Every Python stage unpickles a reference into this package, so a
+worker imports it during its first task and later tasks skip the
+re-read of unchanged zip archives (see :mod:`textcleaning_spark.pyworker`).
 """
 
+from textcleaning_spark import pyworker as _pyworker
+
 __version__ = "0.1.0"
+
+_pyworker.install()

@@ -78,14 +78,16 @@ def n_words_sql(col: str) -> str:
 def char_count_no_spaces(col: Column | str) -> Column:
     """Total token characters = length with spaces removed.
 
-    Computed as ``length - count(' ')`` with a native ``regexp_count``
-    scan instead of ``length(replace(...))``: the replace form
-    materializes a full copy of the document per row. Measured
-    2026-08-18 (2M docs, with the other copy removals + the gated
-    scrub chain): pipeline reps ~20% faster at 8 cores, ~8% faster
-    native-only at 32 (the 32-core leg is DRAM-ceiling-bound, see
-    BENCH/BASELINE.md saturation analysis). Value-identical to the
-    replace form (the SQL twin keeps it), differential-tested.
+    Computed as ``length - regexp_count(' ')``. Spark plans
+    ``regexp_count`` as ``size(regexp_extract_all(...))``: it converts
+    the text to a Java string and builds an array holding one string
+    per space, so this is not a zero-allocation scan. It still beat
+    ``length(replace(...))`` (2M docs, 2026-08-18: ~20% faster at 8
+    cores). On 16k benchmark pages (medians of 7, 4 cores) no
+    alternative beat the ~0.19 s floor of a length-only projection:
+    ``length - (size(split) - 1)`` took 0.201 s against 0.210 s, and
+    gave 0 differing rows. Value-identical to the replace form (the
+    SQL twin keeps it), differential-tested.
     """
     c = F.col(col) if isinstance(col, str) else col
     return (F.length(c) - F.regexp_count(c, F.lit(" "))).cast("bigint")
@@ -125,12 +127,16 @@ def stop_word_count_sql(col: str) -> str:
 def substr_count(col: Column | str, sub: str) -> Column:
     """Occurrences of literal ``sub`` in ``col`` (F14 semantics).
 
-    Native ``regexp_count`` over a ``\\Q..\\E``-quoted literal — a
-    zero-allocation scan, where the ``(length - length(replace))/k``
-    form copies the whole document per row (see
-    :func:`char_count_no_spaces`). Both count non-overlapping
-    left-to-right occurrences, so values are identical (the SQL twin
-    keeps the replace form; differential-tested).
+    ``regexp_count`` over a ``\\Q..\\E``-quoted literal, which Spark
+    plans as ``size(regexp_extract_all(...))``: an array of one match
+    string per occurrence (see :func:`char_count_no_spaces`). On 16k
+    benchmark pages an ``instr`` gate on the ``#``/``...`` counts took
+    0.161 s against 0.169 s ungated (medians of 7, 4 cores), small
+    beside the ~0.19 s a length-only projection costs, so the plain
+    form stays. Both this and the SQL twin's
+    ``(length - length(replace))/k`` form count non-overlapping
+    left-to-right occurrences, so values are identical
+    (differential-tested).
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(c, F.lit("\\Q" + sub + "\\E")).cast("bigint")

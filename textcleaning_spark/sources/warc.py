@@ -23,10 +23,14 @@ Scale shape: the FILE is the parallel unit — Common Crawl segments
 are ~1 GiB archives, tens of thousands per crawl, so a path glob
 yields ample tasks and ``binaryFile`` streams each archive to exactly
 one task (gzip members are not splittable anyway; this is the layout
-cc_net-style pipelines use). The parser is a generator: records are
-yielded per Arrow batch, never a whole archive's pages in one Python
-list-of-rows. Header-only work (url, date) stays tiny; the html bytes
-go straight into the binary column.
+cc_net-style pipelines use). Memory is NOT bounded per record:
+``parse_warc_bytes`` inflates the whole archive with
+``GzipFile.read()``, and ``read_warc``'s ``parse`` builds one
+list-of-rows and one pandas frame of all its pages. So a task holds one
+inflated archive plus one frame of its pages (and ``binaryFile`` caps
+an archive at 2 GiB). ROADMAP direction 5 (bounded-memory WARC
+ingestion) owns the fix. Header-only work (url, date) stays tiny; the
+html bytes go straight into the binary column.
 """
 
 from __future__ import annotations
