@@ -56,8 +56,6 @@ HEADLINE = [
     "scrub_parity",
     "cube_profile",
     "stem_surface_forms",
-    "ann_lsh_topk",
-    "embedding_near_dup_fast",
     "near_dup_clusters",
     "deterministic_sample",
     "curriculum_selection",
@@ -83,7 +81,6 @@ HEADLINE = [
     "vocab_growth_curve",
     "incremental_crawl_dedup",
     "dsir_selection",
-    "semdedup_keep",
     "pipeline_funnel",
     "minhash_lsh_recall",
     "quality_drift_psi",

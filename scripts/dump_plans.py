@@ -47,7 +47,6 @@ FLAGSHIP = [
     ("host_keep_profile", "domain blocklist feed — canonicalize+host fused into the scoring project, one host-keyed agg with map-side partials"),
     ("vocab_growth_curve", "Heaps' law — first-occurrence argmin instead of quadratic prefix-distinct; 1-row scalar broadcast, <=10-row window"),
     ("dsir_selection", "DSIR — one conditional bucket agg (raw+target), 256-row weight broadcast, integer-sum doc agg, TakeOrderedAndProject"),
-    ("semdedup_keep", "SemDedup — shuffle-free literal-centroid assignment; pair join keyed on cluster_id, size-decided build sides"),
     ("pipeline_funnel", "retention funnel — one scan, verdict+tokens scan-side, one md5-key shuffle, 4-stage explode of one 1-row aggregate"),
     ("minhash_lsh_recall", "LSH recall audit — PPJoin-bounded truth pairs vs banded candidates; three scalar aggs crossed, gate filter in integer arithmetic"),
     ("quality_drift_psi", "drift monitor — single-tokenize scan + x3 explode collapse to ONE (signal,source,bucket) shuffle; PSI math on the tiny checkpointed frame"),

@@ -3,8 +3,7 @@
 Hand-checked exact values on small graphs (min-dist semantics, cycles,
 self-exclusion), integer-nano partition invariance, and the sketch's
 determinism + measured accuracy against the exact twin — the same
-truth-vs-approximation discipline as test_drift_recall (LSH) and
-test_similarity (ANN).
+truth-vs-approximation discipline as test_drift_recall (LSH).
 """
 
 from __future__ import annotations

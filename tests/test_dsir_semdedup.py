@@ -1,15 +1,13 @@
-"""Behavior tests for DSIR selection and SemDedup — semantic properties
-the oracle equality can't prove (both engines agreeing doesn't show the
-math MEANS anything). DSIR must actually pull the target distribution
-forward; SemDedup must actually drop within-cluster duplicates and keep
-the deterministic representative."""
+"""Behavior tests for DSIR selection — a semantic property the oracle
+equality can't prove (both engines agreeing doesn't show the math
+MEANS anything): DSIR must actually pull the target distribution
+forward."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from textcleaning_spark import queries as Q
-from textcleaning_spark.operators.similarity import semdedup_keep
 from textcleaning_spark.sources.registry import load_table
 from tests.conftest import SF_ORACLE
 
@@ -24,45 +22,3 @@ def test_dsir_selection_enriches_target(spark):
     frac_sel = sel.filter(F.col("lang") == "en").count() / sel.count()
     base = docs.filter(F.col("lang") == "en").count() / docs.count()
     assert frac_sel > base, (frac_sel, base)
-
-
-def test_semdedup_drops_higher_id_of_identical_pair(spark):
-    """Two identical vectors land in the same cluster at cosine 1.0:
-    the higher id must be dropped, the lower kept; orthogonal
-    singletons all keep."""
-    v = [1.0, 0.0, 0.0, 0.0]
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.0, 1.0, 0.0, 0.0]),
-        (2, [0.0, 0.0, 1.0, 0.0]),
-        (3, v),   # duplicate of vec 0 ...
-        (7, v),   # ... and of each other: only the LOWEST of {0,3,7} keeps
-        (5, [0.0, 0.0, 0.0, 1.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        r["vec_id"]: (r["cluster_id"], r["keep"])
-        for r in semdedup_keep(emb, n_clusters=3, threshold=0.9).collect()
-    }
-    assert len(got) == len(rows)
-    # centroids are ids 0,1,2; 3 and 7 are identical to centroid 0
-    assert got[0] == (0, True)
-    assert got[3] == (0, False)
-    assert got[7] == (0, False)
-    # orthogonal vectors dup nothing
-    assert got[1][1] and got[2][1] and got[5][1]
-
-
-def test_semdedup_threshold_monotone(spark):
-    """Raising the duplicate threshold can only keep MORE vectors (the
-    pair predicate is round(cosine,6) >= t, so the dup set shrinks as
-    t grows)."""
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    kept = [
-        semdedup_keep(emb, n_clusters=8, threshold=t)
-        .filter("keep")
-        .count()
-        for t in (0.3, 0.5, 0.8)
-    ]
-    assert kept[0] <= kept[1] <= kept[2], kept
-    assert kept[0] < emb.count()  # at 0.3 something actually drops

@@ -50,12 +50,8 @@ def test_queries_and_oracles_consistent():
     # iterative training)
     rows_only = sorted(set(qs) - set(osql))
     assert rows_only == [
-        "ann_ivf_topk",
-        "ann_lsh_topk",
-        "ann_recall_vs_bruteforce",
         "bpe_fertility",
         "bpe_merge_table",
-        "embedding_near_dup_fast",
         "hyperball_centrality_audit",
         "ppl_cutoff_routing",
         "vocab_hll_audit",

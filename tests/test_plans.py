@@ -198,23 +198,6 @@ def test_dsir_single_weight_pass_and_topk(spark):
     assert "UnresolvedHint" not in logical
 
 
-def test_semdedup_assignment_shuffle_free(spark):
-    """SemDedup shape: centroid assignment is a narrow projection
-    (literal centroids — no row amplification, no broadcast join, no
-    Exchange between the scan and cluster_id); the pair stage is an
-    equi-join on cluster_id (no cartesian / nested-loop fallback) with
-    size-decided build sides (no forced hints — at 100 TB it must be
-    free to degrade to a shuffle join keyed on cluster_id)."""
-    df = Q.queries()["semdedup_keep"](spark, SF_ORACLE)
-    p = plan_str(df)
-    # one scan per use of the embeddings frame: assigned, pair-a, pair-b
-    # — an Exchange-fed reuse or an extra amplifying join would change it
-    assert p.count("FileScan parquet") == 3, p
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    logical = df._jdf.queryExecution().analyzed().toString()
-    assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
-
-
 def test_pipeline_funnel_single_scan_hash_shuffle(spark):
     """Funnel shape: ONE corpus scan, verdict/token computed scan-side,
     everything collapses through the md5-key aggregation — a second

@@ -12,7 +12,7 @@ Package layout:
     session     SparkSession factory with scale-tuned defaults
     config      pipeline configuration (rule thresholds, stop lists)
     functions/  scalar/array kernels: tokens, tagging, langid, scrub, hashing
-    operators/  relational operators: corpus stats, co-occurrence, dedup, ANN
+    operators/  relational operators: corpus stats, co-occurrence, dedup
     sources/    readers/writers + the synthetic `pages` generator
     plans/      end-to-end pipelines (quality filter, audit/resume)
     streaming/  Structured Streaming variants of the batch stages

@@ -53,31 +53,12 @@ def tf_df(df_tokens: DataFrame, doc_col: str = "doc_id", word_col: str = "word")
     The reference needs two full corpus passes with checkpointed dicts
     (sna_analysis.py:58-116); here it's a single shuffle on ``word``:
     tf = count(*), df = count(DISTINCT doc). The distinct count is
-    per-word exact — at web scale prefer ``df_approx`` below when the
-    contract allows.
+    per-word exact.
     """
     return df_tokens.groupBy(word_col).agg(
         F.count(F.lit(1)).alias("tf"),
         F.countDistinct(F.col(doc_col)).alias("df"),
     )
-
-
-def tf_df_approx(df_tokens: DataFrame, doc_col: str = "doc_id", word_col: str = "word") -> DataFrame:
-    """Approximate-DF variant for metrics at 10^12-doc scale (HLL)."""
-    return df_tokens.groupBy(word_col).agg(
-        F.count(F.lit(1)).alias("tf"),
-        F.approx_count_distinct(F.col(doc_col)).alias("df"),
-    )
-
-
-def with_idf(word_stats: DataFrame, doc_count: int | Column, ndigits: int | None = None) -> DataFrame:
-    """idf = ln(N / (df + 1)) — exact reference formula
-    (text_process_v5.py:94, np.log with +1 smoothing)."""
-    n = F.lit(doc_count) if isinstance(doc_count, int) else doc_count
-    idf = F.log(n.cast("double") / (F.col("df") + F.lit(1)))
-    if ndigits is not None:
-        idf = F.round(idf, ndigits)
-    return word_stats.withColumn("idf", idf)
 
 
 def average_rank(df: DataFrame, value_col: str, out_col: str = "idf_rank") -> Column | DataFrame:

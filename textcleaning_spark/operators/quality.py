@@ -171,18 +171,3 @@ def drop_reasons(df_scored: DataFrame, cfg: QualityConfig | None = None) -> Data
         )
     )
     return df_scored.withColumn("drop_reasons", reasons)
-
-
-def quality_profile(df_scored: DataFrame, *group_cols: str) -> DataFrame:
-    """Aggregate keep/drop counts + mean signals per group — the
-    flagship reporting query (rule-hit metrics table)."""
-    cols = list(group_cols) or ["lang"]
-    return (
-        df_scored.groupBy(*cols, "keep")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("n_words"), 4).alias("avg_words"),
-            F.round(F.avg("mean_word_len"), 4).alias("avg_word_len"),
-            F.round(F.avg("stop_word_count"), 4).alias("avg_stop_words"),
-        )
-    )

@@ -738,13 +738,12 @@ def cooccurrence_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Batch 2: windows, dedup, similarity, scrub
+# Batch 2: windows, dedup, scrub
 # ===========================================================================
 from textcleaning_spark.config import ScrubConfig
 from textcleaning_spark.functions import stemmer
 from textcleaning_spark.functions.scrub import scrub_chain
 from textcleaning_spark.operators import dedup as dd
-from textcleaning_spark.operators import similarity as sim
 from textcleaning_spark.operators import windows as win
 
 
@@ -840,140 +839,9 @@ _JACCARD_T = 0.96
 )
 def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs token-set Jaccard ≥ 0.96 (oracle path; the LSH
-    pipeline replaces this at scale — see ann_lsh_topk / lsh pairs)."""
+    pipeline replaces this at scale — see lsh_candidate_pairs)."""
     docs = load_table(spark, sf_dir, "documents")
     return dd.token_jaccard_pairs(docs, "doc_id", "text", _JACCARD_T)
-
-
-# ---------------------------------------------------------------------------
-# 18. Embedding cosine top-k (brute force, oracle-checked)
-# ---------------------------------------------------------------------------
-@register(
-    "embedding_topk",
-    """
-    WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-        FROM e
-    ),
-    pairs AS (
-        SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-               round(list_reduce(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2]),
-                                 (a, b) -> a + b) / (q.nrm * i.nrm), 6) AS cosine
-        FROM n q JOIN n i ON q.vec_id <> i.vec_id
-    )
-    SELECT query_id, item_id, cosine, rn FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, item_id ASC)::BIGINT AS rn
-        FROM pairs
-    ) WHERE rn <= 5
-    """,
-)
-def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 per vector; sequential-fold dot product
-    gives bit-identical doubles across engines."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.cosine_topk_bruteforce(emb, "vec_id", "embedding", k=5)
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-k — the scale path (rows-only
-    check; recall vs brute force asserted in tests and reported by
-    `ann_recall_vs_bruteforce`).
-
-    Plane count adapts to corpus size so expected bucket size stays
-    ~160 (work per bucket is sz², so bucket size — not corpus size —
-    is the cost knob); 8 tables recover recall. At the driver's
-    sf0.01 (2.5k vectors) that is 4×8: on this unclustered cloud
-    neighbors sit at θ≈63°, p ≈ 1-(1-0.65⁴)⁸ ≈ 0.79. Recall/cost is
-    tunable, measured at sf0.01: widening buckets to ~300 rows (one
-    fewer plane) lifts recall@5 0.68→0.87 for ~1.5× the per-bucket
-    work — `ann_recall_vs_bruteforce` runs exactly that wider config
-    (3 planes × 12 tables, recall 0.95) as the quality gate."""
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    planes = max(4, min(10, round(math.log2(max(n, 1) / 160)))) if n > 320 else 4
-    return sim.hyperplane_lsh_topk(
-        emb, "vec_id", "embedding", k=5, n_planes=planes, n_tables=8
-    )
-
-
-_QUERIES["ann_lsh_topk"] = ann_lsh_topk
-
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k — the clustered scale path (rows-only
-    check; recall + candidate-pruning asserted in tests)."""
-    from textcleaning_spark.operators.ivf import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # nprobe 8/16 cells: measured recall@5 0.73 vs 0.49 at nprobe=4 on
-    # the unclustered synthetic cloud (worst case for IVF); production
-    # shape is thousands of centroids with small nprobe/k.
-    return ivf_topk(emb, "vec_id", "embedding", k=5, n_centroids=16, nprobe=8)
-
-
-_QUERIES["ann_ivf_topk"] = ann_ivf_topk
-
-
-def ann_recall_vs_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible ANN quality gate: recall@5 of BOTH approximate
-    indexes against the brute-force truth set (`embedding_topk`, which
-    IS oracle-checked) — one row per method, FILTERED to
-    ``recall_at_5 >= 0.9`` (round-3 verdict item 7). The gate is thus
-    asserted in-query: a recall regression makes its row vanish, which
-    the driver's rows-only check records as a count drop (2 = both
-    gates pass; measured 0.9488 lsh / 0.9024 ivf at sf0.01, both
-    deterministic — md5 planes, deterministic centroids). No SQL oracle
-    (the LSH/IVF assignments are Python GEMM kernels), but the truth
-    side of the semi-join is the exact query the oracle already
-    validates, so the recall number itself is trustworthy evidence."""
-    from textcleaning_spark.operators.ivf import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = sim.cosine_topk_bruteforce(emb, "vec_id", "embedding", k=5).select(
-        "query_id", "item_id"
-    )
-    out = []
-    for method, approx in (
-        ("lsh", sim.hyperplane_lsh_topk(
-            # planes/tables swept at sf0.01 (2026-08-17): 3/12 gives
-            # recall 0.95 at the same runtime as the old 4/8's 0.68 —
-            # fewer planes = wider buckets at this corpus size. At 100×
-            # scale n_planes grows ~log2(N / target_bucket_rows); the
-            # recall gate re-measures whatever is configured.
-            emb, "vec_id", "embedding", k=5, n_planes=3, n_tables=12
-        )),
-        # nprobe 12/16 cells: recall 0.90 vs 0.73 at nprobe=8, same cost
-        ("ivf", ivf_topk(emb, "vec_id", "embedding", k=5, n_centroids=16, nprobe=12)),
-    ):
-        hits = approx.select("query_id", "item_id").join(
-            truth, ["query_id", "item_id"], "left_semi"
-        )
-        out.append(
-            truth.agg(F.count(F.lit(1)).alias("n_truth")).crossJoin(
-                hits.agg(F.count(F.lit(1)).alias("n_hits"))
-            ).select(
-                F.lit(method).alias("method"),
-                F.col("n_truth").cast("bigint").alias("n_truth"),
-                F.col("n_hits").cast("bigint").alias("n_hits"),
-                F.round(
-                    F.col("n_hits").cast("double") / F.col("n_truth"), 4
-                ).alias("recall_at_5"),
-            )
-        )
-    return (
-        out[0].unionByName(out[1]).filter(F.col("recall_at_5") >= F.lit(0.9))
-    )
-
-
-_QUERIES["ann_recall_vs_bruteforce"] = ann_recall_vs_bruteforce
 
 
 # ---------------------------------------------------------------------------
@@ -1692,40 +1560,6 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 37. Embedding-cosine near-duplicate pairs (dedup-by-embedding baseline)
-# ---------------------------------------------------------------------------
-_COS_T = 0.4
-
-
-@register(
-    "embedding_near_dup",
-    f"""
-    WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-        FROM e
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_reduce(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]),
-                             (x, y) -> x + y) / (a.nrm * b.nrm), 6) AS cosine
-    FROM n a JOIN n b ON a.vec_id < b.vec_id
-    WHERE round(list_reduce(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]),
-                            (x, y) -> x + y) / (a.nrm * b.nrm), 6) >= {_COS_T}
-    """,
-)
-def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact embedding-cosine near-dup pairs (reference analogue: the
-    LSA doc-similarity path, text_process.py:412-421). O(N²) oracle
-    baseline; the LSH/IVF operators are the 100 TB path."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.cosine_near_dup_pairs(emb, "vec_id", "embedding", _COS_T)
-
-
-# ---------------------------------------------------------------------------
 # 39. ntile deciles over document length
 # ---------------------------------------------------------------------------
 @register(
@@ -1906,18 +1740,6 @@ def vocab_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(cnt(long_w.subtract(short_w), "n_long_only"))
         .crossJoin(cnt(short_w.subtract(long_w), "n_short_only"))
     )
-
-
-def embedding_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GEMM (blocked numpy matmul over Arrow batches) form of
-    embedding_near_dup — the throughput path; equality to the exact
-    fold form asserted in tests/test_similarity.py (rows-only driver
-    check: accumulation order differs in the last ulp)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.cosine_near_dup_blocked(emb, "vec_id", "embedding", _COS_T)
-
-
-_QUERIES["embedding_near_dup_fast"] = embedding_near_dup_fast
 
 
 # ---------------------------------------------------------------------------
@@ -3334,74 +3156,6 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 67. SemDedup — cluster-then-dedup over embeddings (Abbas et al. 2023)
-# ---------------------------------------------------------------------------
-_SEM_K = 8       # seed centroids (see semdedup_keep's determinism contract)
-_SEM_T = 0.4     # intra-cluster duplicate threshold (= _COS_T)
-
-
-@register(
-    "semdedup_keep",
-    f"""
-    WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_reduce(list_transform(v, x -> x * x),
-                                (a, b) -> a + b)) AS nrm
-        FROM e
-    ),
-    c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm
-          FROM n ORDER BY vec_id LIMIT {_SEM_K}),
-    scored AS (
-        SELECT n.vec_id, c.cid,
-               round(list_reduce(list_transform(list_zip(n.v, c.cv),
-                                                p -> p[1] * p[2]),
-                                 (a, b) -> a + b) / (n.nrm * c.cnrm),
-                     6) AS cosine
-        FROM n CROSS JOIN c
-    ),
-    assigned AS (
-        SELECT vec_id, cid AS cluster_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id
-                                         ORDER BY cosine DESC, cid ASC) AS rn
-            FROM scored
-        ) WHERE rn = 1
-    ),
-    dups AS (
-        SELECT DISTINCT b.vec_id
-        FROM assigned a
-        JOIN assigned b ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-        JOIN n na ON na.vec_id = a.vec_id
-        JOIN n nb ON nb.vec_id = b.vec_id
-        WHERE round(list_reduce(list_transform(list_zip(na.v, nb.v),
-                                               p -> p[1] * p[2]),
-                                (x, y) -> x + y) / (na.nrm * nb.nrm),
-                    6) >= {_SEM_T}
-    )
-    SELECT a.vec_id::BIGINT AS vec_id,
-           a.cluster_id::BIGINT AS cluster_id,
-           (d.vec_id IS NULL) AS keep
-    FROM assigned a LEFT JOIN dups d ON d.vec_id = a.vec_id
-    """,
-)
-def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup (Abbas et al. 2023): assign every embedding to its
-    nearest of k centroids, then drop the higher id of any
-    within-cluster pair at round(cosine, 6) ≥ {_SEM_T} — semantic
-    dedup whose pair space is capped by the cluster partition instead
-    of N². See operators/similarity.semdedup_keep for the determinism
-    contract (seed centroids, fold cosine, id tie-breaks) and the
-    shuffle-free assignment scale shape."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.semdedup_keep(
-        emb, "vec_id", "embedding", n_clusters=_SEM_K, threshold=_SEM_T
-    )
-
-
-# ---------------------------------------------------------------------------
 # 68. Pipeline funnel report (stage-by-stage doc/token retention)
 # ---------------------------------------------------------------------------
 @register(
@@ -3535,9 +3289,8 @@ _LSH_AUDIT_HEX_CUT = "33333333"  # ~20% deterministic audit sample
 
 # ---------------------------------------------------------------------------
 # 69. MinHash-LSH recall audit — closes the loop on the near-dup scale
-#     path the way ann_recall_vs_bruteforce closed it for ANN, but
-#     FULLY oracle-checked: both sides of the recall fraction are md5
-#     arithmetic DuckDB can replay exactly.
+#     path, FULLY oracle-checked: both sides of the recall fraction are
+#     md5 arithmetic DuckDB can replay exactly.
 # ---------------------------------------------------------------------------
 @register(
     "minhash_lsh_recall",
@@ -3608,9 +3361,9 @@ def minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_hits*10 >= n_truth*9, exact integer arithmetic — CLAUDE.md
     unrounded-verdict rule) makes the single report row VANISH if
     banding ever degrades below 0.9, which the driver records as a
-    row-count drop even before the value hash. Unlike the ANN gate
-    this one is fully oracle-checked: signatures and band hashes are
-    md5 expressions both engines evaluate identically.
+    row-count drop even before the value hash. The gate is fully
+    oracle-checked: signatures and band hashes are md5 expressions
+    both engines evaluate identically.
 
     n_candidates context: the synthetic corpus is template-dense
     (median pair Jaccard ~0.6 at sf0.01), so most candidate pairs are
@@ -3916,8 +3669,7 @@ def nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # 72. HLL cardinality audit — the 100 TB scale path for vocabulary
-#     counting, gated in-query against the exact count the same way
-#     ann_recall_vs_bruteforce gates the ANN indexes.
+#     counting, gated in-query against the exact count.
 # ---------------------------------------------------------------------------
 @register("vocab_hll_audit")  # rows-only: HLL++ register layout is engine-
 # specific, so DuckDB cannot replay the estimate; the gate is in-query.
@@ -4818,8 +4570,7 @@ _BLOOM_MIN_BITS = 1 << 14
 
 def _bloom_bits(n_elems: int) -> int:
     """Bitmap size for ``n_elems`` members: 32 bits/element rounded up
-    to a power of two (same auto-sizing discipline as the LSH plane
-    count, similarity.py) — an eval set that grows 10× keeps its fpp
+    to a power of two — an eval set that grows 10× keeps its fpp
     instead of silently saturating the filter."""
     bits = _BLOOM_MIN_BITS
     while bits < _BLOOM_BITS_PER_ELEM * n_elems:

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 # the tables registry entries read; the oracle harness views each in DuckDB
-TABLES = ("events", "documents", "embeddings")
+TABLES = ("events", "documents")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
