@@ -145,8 +145,8 @@ def test_resume_contract_iceberg(spark, scored, tmp_path):
     if not iceberg_available(spark):
         pytest.skip("Iceberg Spark runtime jar not on the classpath")
     out, audit = str(tmp_path / "out_ice"), str(tmp_path / "audit_ice")
-    n1 = run_resumable(scored, spark, out, audit, "quality_filter", fmt="iceberg")
+    n1 = run_resumable(scored, spark, out, audit, "quality_filter")
     assert n1 == 200
-    n2 = run_resumable(scored, spark, out, audit, "quality_filter", fmt="iceberg")
+    n2 = run_resumable(scored, spark, out, audit, "quality_filter")
     assert n2 == 0
     assert spark.read.format("iceberg").load(out).count() == 200

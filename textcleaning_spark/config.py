@@ -73,6 +73,26 @@ CC_DRIVER_THRESHOLD: int = 1_000_000
 COOC_MAX_ACTORS_PER_KEY: int = 10_000
 
 
+# The nine document rules, in drop_reasons order: (reason, signal, min
+# field, max field). A document fails a rule when its signal is below the
+# QualityConfig min field or above the max field (None: no bound on that
+# side), and is kept when it fails none. Every keep/drop twin is built
+# from this table: the Spark keep and drop_reasons (operators/quality.py),
+# the DuckDB keep_expr_sql and reason list (functions/text.py) and the
+# hits_<reason> metrics columns (plans/pipeline.py).
+QUALITY_RULES: tuple[tuple[str, str, str | None, str | None], ...] = (
+    ("too_short", "n_words", "min_words", None),
+    ("too_long", "n_words", None, "max_words"),
+    ("word_len", "mean_word_len", "min_mean_word_len", "max_mean_word_len"),
+    ("symbol_ratio", "symbol_ratio", None, "max_symbol_to_word_ratio"),
+    ("no_stop_words", "stop_word_count", "min_stop_word_count", None),
+    ("dup_lines", "dup_line_frac", None, "max_dup_line_frac"),
+    ("dup_ngrams", "dup_ngram_frac", None, "max_dup_ngram_frac"),
+    ("non_alpha", "alpha_word_frac", "min_alpha_word_frac", None),
+    ("ellipsis", "ellipsis_line_frac", None, "max_ellipsis_line_frac"),
+)
+
+
 @dataclass(frozen=True)
 class QualityConfig:
     """Document-level keep/drop heuristic thresholds (Gopher/C4-style).
@@ -94,17 +114,28 @@ class QualityConfig:
     min_alpha_word_frac: float = 0.60        # frac of tokens with an alpha char
     max_ellipsis_line_frac: float = 0.30
 
+    def rules(self) -> list[tuple[str, str, float | None, float | None]]:
+        """:data:`QUALITY_RULES` with each bound field read from this
+        config: ``(reason, signal, min, max)``."""
+        return [
+            (
+                reason,
+                signal,
+                None if lo is None else getattr(self, lo),
+                None if hi is None else getattr(self, hi),
+            )
+            for reason, signal, lo, hi in QUALITY_RULES
+        ]
+
 
 @dataclass(frozen=True)
 class CorpusStatsConfig:
     """Word-statistics knobs (reference values preserved as defaults)."""
 
-    idf_rank_cutoff: float = 100.0   # text_process_v5.py:164 (v6 uses 10)
     quantile_q: float = 0.25         # sna_analysis.py:178
     alpha: float = 0.9               # sna_analysis.py:179
     vocab_top_n: int = 50_000        # sna_analysis.py:119
     vocab_min_freq: int = 3          # 'lower' in sna_analysis.py:119
-    stop_pos_level: int = 3
 
 
 @dataclass(frozen=True)
@@ -129,9 +160,7 @@ class ScrubConfig:
 @dataclass(frozen=True)
 class PipelineConfig:
     quality: QualityConfig = field(default_factory=QualityConfig)
-    stats: CorpusStatsConfig = field(default_factory=CorpusStatsConfig)
     scrub: ScrubConfig = field(default_factory=ScrubConfig)
-    langid_default: str = "und"
 
 
 DEFAULT_CONFIG = PipelineConfig()

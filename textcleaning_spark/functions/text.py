@@ -224,21 +224,58 @@ def dup_ngram_frac_sql(col: str) -> str:
 
 # ---------------------------------------------------------------------------
 # document keep/drop verdict (Gopher/C4-style; generalizes the reference's
-# word-level idf_rank>=K ∧ pos∈pass rule to documents)
+# word-level idf_rank>=K ∧ pos∈pass rule to documents), generated from
+# config.QUALITY_RULES
 # ---------------------------------------------------------------------------
+
+# SQL twin of each quality signal, by its QUALITY_RULES name
+SIGNAL_SQL = {
+    "n_words": n_words_sql,
+    "mean_word_len": mean_word_len_sql,
+    "symbol_ratio": symbol_to_word_ratio_sql,
+    "stop_word_count": stop_word_count_sql,
+    "dup_line_frac": dup_line_frac_sql,
+    "dup_ngram_frac": dup_ngram_frac_sql,
+    "alpha_word_frac": alpha_word_frac_sql,
+    "ellipsis_line_frac": ellipsis_line_frac_sql,
+}
+# Counts publish exact; every other signal is a ratio published rounded
+# to 6 decimals. keep reads the unrounded ratios, drop_reasons the
+# published ones.
+COUNT_SIGNALS = frozenset({"n_words", "stop_word_count"})
 
 
 def keep_expr_sql(col: str, cfg: QualityConfig | None = None) -> str:
     cfg = cfg or QualityConfig()
-    nw = n_words_sql(col)
-    return (
-        f"({nw} >= {cfg.min_words} AND {nw} <= {cfg.max_words}"
-        f" AND {mean_word_len_sql(col)} >= {cfg.min_mean_word_len}"
-        f" AND {mean_word_len_sql(col)} <= {cfg.max_mean_word_len}"
-        f" AND {symbol_to_word_ratio_sql(col)} <= {cfg.max_symbol_to_word_ratio}"
-        f" AND {stop_word_count_sql(col)} >= {cfg.min_stop_word_count}"
-        f" AND {dup_line_frac_sql(col)} <= {cfg.max_dup_line_frac}"
-        f" AND {dup_ngram_frac_sql(col)} <= {cfg.max_dup_ngram_frac}"
-        f" AND {alpha_word_frac_sql(col)} >= {cfg.min_alpha_word_frac}"
-        f" AND {ellipsis_line_frac_sql(col)} <= {cfg.max_ellipsis_line_frac})"
+    checks = []
+    for _, signal, lo, hi in cfg.rules():
+        sig = SIGNAL_SQL[signal](col)
+        if lo is not None:
+            checks.append(f"{sig} >= {lo}")
+        if hi is not None:
+            checks.append(f"{sig} <= {hi}")
+    return f"({' AND '.join(checks)})"
+
+
+def signals_sql(col: str) -> str:
+    """Select list of the published quality signals of ``col``, one
+    ``<expr> AS <signal>`` each (what :func:`drop_reasons_sql` reads)."""
+    return ", ".join(
+        f"{frag(col) if s in COUNT_SIGNALS else f'round({frag(col)}, 6)'} AS {s}"
+        for s, frag in SIGNAL_SQL.items()
     )
+
+
+def drop_reasons_sql(cfg: QualityConfig | None = None) -> str:
+    """List of every failed rule's reason over the published signal
+    columns: the SQL twin of ``operators/quality.drop_reasons``."""
+    cfg = cfg or QualityConfig()
+    failed = []
+    for reason, signal, lo, hi in cfg.rules():
+        outside = []
+        if lo is not None:
+            outside.append(f"{signal} < {lo}")
+        if hi is not None:
+            outside.append(f"{signal} > {hi}")
+        failed.append(f"CASE WHEN {' OR '.join(outside)} THEN '{reason}' END")
+    return f"list_filter([{', '.join(failed)}], x -> x IS NOT NULL)"

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from textcleaning_spark.config import COOC_MAX_ACTORS_PER_KEY
 from textcleaning_spark.operators.corpus_stats import explode_tokens
 
 
@@ -39,13 +40,10 @@ def actor_word_weights(
     )
 
 
-_USE_CONFIG_CAP = object()  # sentinel: pass None to explicitly disable
-
-
 def cooccurrence_edges(
     weights: DataFrame,
     vocab: DataFrame | None = None,
-    max_actors_per_key: int | None = _USE_CONFIG_CAP,  # type: ignore[assignment]
+    max_actors_per_key: int | None = COOC_MAX_ACTORS_PER_KEY,
 ) -> DataFrame:
     """Edge list: actor pairs sharing a word in the same ts bucket (J1).
 
@@ -64,10 +62,6 @@ def cooccurrence_edges(
     w = weights
     if vocab is not None:
         w = w.join(F.broadcast(vocab.select("word")), "word", "left_semi")
-    if max_actors_per_key is _USE_CONFIG_CAP:
-        from textcleaning_spark.config import COOC_MAX_ACTORS_PER_KEY
-
-        max_actors_per_key = COOC_MAX_ACTORS_PER_KEY
     if max_actors_per_key is not None:
         key_sizes = w.groupBy("ts", "word").agg(F.count(F.lit(1)).alias("k"))
         hot = key_sizes.filter(F.col("k") > max_actors_per_key).select("ts", "word")

@@ -9,7 +9,10 @@ path) so the whole stage is whole-stage-codegen'd and pushdown-able.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from textcleaning_spark.config import QualityConfig
@@ -73,57 +76,41 @@ def score_documents(
         )
     )
     nw = F.col("__nw")
-    n_chars = F.col("__nchars")
     n_lines = F.col("__nlines")
-    syms = F.col("__syms")
-    stop_cnt = F.col("__stop")
-    alpha = F.col("__alpha")
     n_grams = F.col("__ngrams")
-    dupg = F.when(
-        n_grams > 0,
-        (n_grams - F.col("__ndupg")).cast("double") / n_grams,
-    ).otherwise(F.lit(0.0))
-    dup = F.when(
-        n_lines > 0,
-        (n_lines - F.col("__nduplines")).cast("double") / n_lines,
-    ).otherwise(F.lit(0.0))
-    ell = F.when(
-        n_lines > 0,
-        F.col("__nell").cast("double") / n_lines,
-    ).otherwise(F.lit(0.0))
 
-    scored = (
-        counts.withColumn("n_words", nw)
-        .withColumn(
-            "mean_word_len",
-            F.round(F.when(nw > 0, n_chars.cast("double") / nw), 6),
+    def per_word(count: Column) -> Column:
+        return F.when(nw > 0, count.cast("double") / nw)
+
+    def per_item(n: Column, count: Column) -> Column:
+        return F.when(n > 0, count.cast("double") / n).otherwise(F.lit(0.0))
+
+    # unrounded signals by config.QUALITY_RULES name, in published
+    # column order
+    signals = {
+        "n_words": nw,
+        "mean_word_len": per_word(F.col("__nchars")),
+        "stop_word_count": F.col("__stop"),
+        "symbol_ratio": per_word(F.col("__syms")),
+        "alpha_word_frac": per_word(F.col("__alpha")),
+        "dup_line_frac": per_item(n_lines, n_lines - F.col("__nduplines")),
+        "dup_ngram_frac": per_item(n_grams, n_grams - F.col("__ndupg")),
+        "ellipsis_line_frac": per_item(n_lines, F.col("__nell")),
+    }
+    scored = counts
+    for name, sig in signals.items():
+        scored = scored.withColumn(
+            name, sig if name in T.COUNT_SIGNALS else F.round(sig, 6)
         )
-        .withColumn("stop_word_count", stop_cnt)
-        .withColumn(
-            "symbol_ratio", F.round(F.when(nw > 0, syms.cast("double") / nw), 6)
-        )
-        .withColumn(
-            "alpha_word_frac", F.round(F.when(nw > 0, alpha.cast("double") / nw), 6)
-        )
-        .withColumn("dup_line_frac", F.round(dup, 6))
-        .withColumn("dup_ngram_frac", F.round(dupg, 6))
-        .withColumn("ellipsis_line_frac", F.round(ell, 6))
-    )
     # verdict from UNROUNDED ratios (cheap divisions over the already-
     # computed counts) so boundary cases match the golden labels exactly
-    mean_raw = F.when(nw > 0, n_chars.cast("double") / nw)
-    keep = (
-        (nw >= cfg.min_words)
-        & (nw <= cfg.max_words)
-        & (mean_raw >= cfg.min_mean_word_len)
-        & (mean_raw <= cfg.max_mean_word_len)
-        & (F.when(nw > 0, syms.cast("double") / nw) <= cfg.max_symbol_to_word_ratio)
-        & (stop_cnt >= cfg.min_stop_word_count)
-        & (dup <= cfg.max_dup_line_frac)
-        & (dupg <= cfg.max_dup_ngram_frac)
-        & (F.when(nw > 0, alpha.cast("double") / nw) >= cfg.min_alpha_word_frac)
-        & (ell <= cfg.max_ellipsis_line_frac)
-    )
+    checks = []
+    for _, signal, lo, hi in cfg.rules():
+        if lo is not None:
+            checks.append(signals[signal] >= lo)
+        if hi is not None:
+            checks.append(signals[signal] <= hi)
+    keep = reduce(operator.and_, checks)
     return scored.withColumn("keep", keep).drop(
         "__toks", "__lines", "__grams", "__nw", "__nchars", "__nlines",
         "__syms", "__stop", "__alpha", "__ngrams", "__ndupg",
@@ -136,38 +123,13 @@ def drop_reasons(df_scored: DataFrame, cfg: QualityConfig | None = None) -> Data
     the audit/metrics payload (north_rule per-partition rule-hit
     metrics are aggregations over this column)."""
     cfg = cfg or QualityConfig()
-    reasons = F.array_compact(
-        F.array(
-            F.when(F.col("n_words") < cfg.min_words, F.lit("too_short")),
-            F.when(F.col("n_words") > cfg.max_words, F.lit("too_long")),
-            F.when(
-                (F.col("mean_word_len") < cfg.min_mean_word_len)
-                | (F.col("mean_word_len") > cfg.max_mean_word_len),
-                F.lit("word_len"),
-            ),
-            F.when(
-                F.col("symbol_ratio") > cfg.max_symbol_to_word_ratio,
-                F.lit("symbol_ratio"),
-            ),
-            F.when(
-                F.col("stop_word_count") < cfg.min_stop_word_count,
-                F.lit("no_stop_words"),
-            ),
-            F.when(
-                F.col("dup_line_frac") > cfg.max_dup_line_frac, F.lit("dup_lines")
-            ),
-            F.when(
-                F.col("dup_ngram_frac") > cfg.max_dup_ngram_frac,
-                F.lit("dup_ngrams"),
-            ),
-            F.when(
-                F.col("alpha_word_frac") < cfg.min_alpha_word_frac,
-                F.lit("non_alpha"),
-            ),
-            F.when(
-                F.col("ellipsis_line_frac") > cfg.max_ellipsis_line_frac,
-                F.lit("ellipsis"),
-            ),
-        )
-    )
+    failed = []
+    for reason, signal, lo, hi in cfg.rules():
+        outside = []
+        if lo is not None:
+            outside.append(F.col(signal) < lo)
+        if hi is not None:
+            outside.append(F.col(signal) > hi)
+        failed.append(F.when(reduce(operator.or_, outside), F.lit(reason)))
+    reasons = F.array_compact(F.array(*failed))
     return df_scored.withColumn("drop_reasons", reasons)

@@ -64,14 +64,11 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
 
 
-def completed_buckets(
-    spark: SparkSession, audit_path: str, stage: str, fmt: str | None = None
-) -> DataFrame:
+def completed_buckets(spark: SparkSession, audit_path: str, stage: str) -> DataFrame:
     """Buckets already finished for ``stage`` (empty DF if no audit yet)."""
-    fmt = fmt or storage_format(spark)
     if not path_exists(spark, audit_path):
         return spark.range(0).select(F.col("id").cast("int").alias("lineage_bucket"))
-    audit = spark.read.format(fmt).load(audit_path)
+    audit = spark.read.format(storage_format(spark)).load(audit_path)
     return (
         audit.filter(F.col("stage") == stage)
         .select("lineage_bucket")
@@ -79,13 +76,7 @@ def completed_buckets(
     )
 
 
-def pending(
-    df: DataFrame,
-    spark: SparkSession,
-    audit_path: str,
-    stage: str,
-    fmt: str | None = None,
-) -> DataFrame:
+def pending(df: DataFrame, spark: SparkSession, audit_path: str, stage: str) -> DataFrame:
     """Resume predicate: keep only rows whose bucket has no audit row.
 
     The done buckets (at most ``N_LINEAGE_BUCKETS`` ids) are collected
@@ -94,7 +85,7 @@ def pending(
     above the source, so a resumed run neither detects the language of
     nor scores a done bucket's rows; a join against the audit table
     sits above both and would not."""
-    done = [r[0] for r in completed_buckets(spark, audit_path, stage, fmt).collect()]
+    done = [r[0] for r in completed_buckets(spark, audit_path, stage).collect()]
     return df.filter(~F.col("lineage_bucket").isin(done)) if done else df
 
 
@@ -105,7 +96,6 @@ def write_stage(
     audit_path: str,
     stage: str,
     metrics: DataFrame | None = None,
-    fmt: str | None = None,
 ) -> int:
     """Write stage output partitioned by lineage bucket, then append
     the audit rows for the buckets written; returns the number of rows
@@ -135,13 +125,13 @@ def write_stage(
     at most the bucket count, which is also the resume unit. Row order
     inside a file is not part of the contract.
 
-    ``fmt`` defaults to :func:`storage_format` — ``iceberg`` when the
+    The format is :func:`storage_format`'s — ``iceberg`` when the
     runtime jar is present, else ``parquet``. Both legs use dynamic
     partition overwrite so only the buckets present in THIS write are
     replaced; the audit append happens AFTER the data write commits, so
     a crash between the two re-runs the bucket (at-least-once,
     idempotent because the data write is per-bucket overwrite)."""
-    fmt = fmt or storage_format(spark)
+    fmt = storage_format(spark)
     n_tasks = min(spark.sparkContext.defaultParallelism, N_LINEAGE_BUCKETS)
     written = Observation()
     (
@@ -180,12 +170,10 @@ def run_resumable(
     out_path: str,
     audit_path: str,
     stage: str = STAGE,
-    fmt: str | None = None,
 ) -> int:
     """Process only pending buckets; returns how many rows were newly
     processed (0 == nothing to do, fully resumed). One pass: the count
     is :func:`write_stage`'s observed row count, and the audit rows are
     its default ``metrics_table`` payload."""
-    fmt = fmt or storage_format(spark)
-    todo = pending(df_pages_scored, spark, audit_path, stage, fmt)
-    return write_stage(todo, spark, out_path, audit_path, stage, fmt=fmt)
+    todo = pending(df_pages_scored, spark, audit_path, stage)
+    return write_stage(todo, spark, out_path, audit_path, stage)

@@ -15,10 +15,9 @@ fuses the native stages into one scan-side project over ONE scan of
 the source; only langid crosses into Python,
 Arrow-batched, in one ArrowEvalPython stage.
 
-Scale design: shuffle-free until the metrics aggregation; skew from
-giant documents handled by length-bucketed repartition (operators/
-skew.py) before any downstream shuffle; lineage buckets (stable
-xxhash64(url) % N) give per-bucket audit + resume (plans/audit.py).
+Scale design: shuffle-free until the metrics aggregation; lineage
+buckets (stable xxhash64(url) % N) give per-bucket audit + resume
+(plans/audit.py).
 """
 
 from __future__ import annotations
@@ -26,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from textcleaning_spark.config import DEFAULT_CONFIG, PipelineConfig
+from textcleaning_spark.config import DEFAULT_CONFIG, QUALITY_RULES, PipelineConfig
 from textcleaning_spark.functions.langid import langid_udf
 from textcleaning_spark.functions.scrub import rule_hits, scrub_col
 from textcleaning_spark.functions.text import decode_utf8, decode_utf8_py
@@ -152,11 +151,7 @@ def metrics_table(scored: DataFrame) -> DataFrame:
         F.sum(
             F.when(F.array_contains(F.col("drop_reasons"), r), 1).otherwise(0)
         ).cast("bigint").alias(f"hits_{r}")
-        for r in (
-            "too_short", "too_long", "word_len", "symbol_ratio",
-            "no_stop_words", "dup_lines", "dup_ngrams", "non_alpha",
-            "ellipsis",
-        )
+        for r, *_ in QUALITY_RULES
     ]
     return scored.groupBy("lineage_bucket", "lang_final").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

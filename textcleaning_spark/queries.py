@@ -2141,43 +2141,18 @@ def boilerplate_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 56. Per-rule hit metrics (north_rule: "rule-hit metrics" audit table)
 # ---------------------------------------------------------------------------
-def _r6(frag: str) -> str:
-    return f"round({frag}, 6)"
-
-
-_RULE_CASES_SQL = f"""[
-    CASE WHEN n_words < {_QCFG.min_words} THEN 'too_short' END,
-    CASE WHEN n_words > {_QCFG.max_words} THEN 'too_long' END,
-    CASE WHEN mean_word_len < {_QCFG.min_mean_word_len}
-           OR mean_word_len > {_QCFG.max_mean_word_len} THEN 'word_len' END,
-    CASE WHEN symbol_ratio > {_QCFG.max_symbol_to_word_ratio} THEN 'symbol_ratio' END,
-    CASE WHEN stop_word_count < {_QCFG.min_stop_word_count} THEN 'no_stop_words' END,
-    CASE WHEN dup_line_frac > {_QCFG.max_dup_line_frac} THEN 'dup_lines' END,
-    CASE WHEN dup_ngram_frac > {_QCFG.max_dup_ngram_frac} THEN 'dup_ngrams' END,
-    CASE WHEN alpha_word_frac < {_QCFG.min_alpha_word_frac} THEN 'non_alpha' END,
-    CASE WHEN ellipsis_line_frac > {_QCFG.max_ellipsis_line_frac} THEN 'ellipsis' END
-]"""
+# the published signals, the sig CTE of the rule-hit queries
+_SIG_CTE = f"sig AS (SELECT lang, {T.signals_sql('text')} FROM documents)"
 
 
 @register(
     "rule_hit_profile",
     f"""
-    WITH sig AS (
-        SELECT lang,
-               {T.n_words_sql('text')} AS n_words,
-               {_r6(T.mean_word_len_sql('text'))} AS mean_word_len,
-               {_r6(T.symbol_to_word_ratio_sql('text'))} AS symbol_ratio,
-               {T.stop_word_count_sql('text')} AS stop_word_count,
-               {_r6(T.dup_line_frac_sql('text'))} AS dup_line_frac,
-               {_r6(T.dup_ngram_frac_sql('text'))} AS dup_ngram_frac,
-               {_r6(T.alpha_word_frac_sql('text'))} AS alpha_word_frac,
-               {_r6(T.ellipsis_line_frac_sql('text'))} AS ellipsis_line_frac
-        FROM documents
-    )
+    WITH {_SIG_CTE}
     SELECT lang, reason, count(*)::BIGINT AS n_docs
     FROM (
         SELECT lang,
-               unnest(list_filter({_RULE_CASES_SQL}, x -> x IS NOT NULL)) AS reason
+               unnest({T.drop_reasons_sql()}) AS reason
         FROM sig
     )
     GROUP BY lang, reason
@@ -2189,8 +2164,8 @@ def rule_hit_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage + metrics'; operators/quality.drop_reasons is the
     row-level payload). Dual-spec: the Spark side explodes the
     drop_reasons array; the oracle rebuilds each rule from the SAME
-    *_sql signal fragments and thresholds (one rule table, two twins —
-    the CLAUDE.md dual-spec invariant). Signals are compared at their
+    rule table (config.QUALITY_RULES) over the *_sql signal fragments
+    — the CLAUDE.md dual-spec invariant. Signals are compared at their
     published 6-decimal rounding on BOTH sides, matching what
     drop_reasons itself sees."""
     docs = load_table(spark, sf_dir, "documents")
@@ -3713,19 +3688,9 @@ def vocab_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "rule_ablation",
     f"""
-    WITH sig AS (
-        SELECT {T.n_words_sql('text')} AS n_words,
-               {_r6(T.mean_word_len_sql('text'))} AS mean_word_len,
-               {_r6(T.symbol_to_word_ratio_sql('text'))} AS symbol_ratio,
-               {T.stop_word_count_sql('text')} AS stop_word_count,
-               {_r6(T.dup_line_frac_sql('text'))} AS dup_line_frac,
-               {_r6(T.dup_ngram_frac_sql('text'))} AS dup_ngram_frac,
-               {_r6(T.alpha_word_frac_sql('text'))} AS alpha_word_frac,
-               {_r6(T.ellipsis_line_frac_sql('text'))} AS ellipsis_line_frac
-        FROM documents
-    ),
+    WITH {_SIG_CTE},
     r AS (
-        SELECT list_filter({_RULE_CASES_SQL}, x -> x IS NOT NULL) AS reasons
+        SELECT {T.drop_reasons_sql()} AS reasons
         FROM sig
     ),
     ex AS (
