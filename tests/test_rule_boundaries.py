@@ -7,17 +7,12 @@ must agree on ``keep`` and on the reasons: Spark
 ``drop_reasons_sql``, and the hand-written ``golden_keep``. The
 synthetic corpora put no document on a threshold, so only documents like
 these catch a generated ``<`` that should be ``<=``.
-
-``max_words`` is lowered to 60 so the too_long bound is reachable by a
-short document: the DuckDB 2-gram signal re-splits the text once per
-gram, which a 100,000-word document does not survive.
 """
 
 from __future__ import annotations
 
 import itertools
 import string
-from dataclasses import replace
 
 import duckdb
 import pytest
@@ -27,7 +22,7 @@ from textcleaning_spark.functions import text as T
 from textcleaning_spark.operators.quality import drop_reasons, score_documents
 from tests.test_pipeline_golden import golden_keep
 
-CFG = replace(QualityConfig(), max_words=60)
+CFG = QualityConfig()
 
 # distinct 4-letter alphabetic non-stop words: aaaa, aaab, ...
 _VOCAB = [
@@ -85,7 +80,8 @@ def _ellipsis(n_ell: int) -> str:
 # (reason, bound, on the bound, one unit inside, one unit outside)
 CASES = [
     ("too_short", "min", _doc(5), _doc(6), _doc(4)),
-    ("too_long", "max", _doc(60), _doc(59), _doc(61)),
+    ("too_long", "max", _doc(CFG.max_words), _doc(CFG.max_words - 1),
+     _doc(CFG.max_words + 1)),
     ("word_len", "min", "of to in is on", "of to in is one", "of to in is a"),
     ("word_len", "max", _mean_len(60), _mean_len(59), _mean_len(61)),
     ("symbol_ratio", "max", _symbols(2), _symbols(1), _symbols(3)),

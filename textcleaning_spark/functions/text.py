@@ -192,33 +192,37 @@ def ellipsis_line_frac_sql(col: str) -> str:
     )
 
 
-def word_2gram_pairs(toks: Column) -> Column:
-    """Adjacent token pairs as structs — TWO whole-array slices
+def word_2grams(toks: Column) -> Column:
+    """Adjacent token pairs as ``array<string>`` keys, one per 2-gram,
+    for a distinct count.
+
+    The pairs come from TWO whole-array slices
     (``arrays_zip(toks[:-1], toks[1:])``), not n per-position slices
-    with per-pair string building. Tokens cannot contain the space
-    joiner (they come from a space split), so pair-struct distinct
-    counts are exactly the space-joined 2-gram distinct counts — the
-    SQL twin (:func:`dup_ngram_frac_sql`) keeps the string form.
-    Measured ~6× on the pipeline's score stage at 200k docs."""
+    with per-pair string building (measured ~6× on the score stage at
+    200k docs). One codegen'd cast then turns each ``struct<a, b>``
+    into the string ``"{a, b}"``: ``array_distinct`` hashes strings,
+    but over structs it falls back to a nested loop, quadratic in the
+    gram count (one 32,000-word document took 18 s to score).
+
+    The key is injective, so distinct keys are exactly the distinct
+    space-joined 2-grams of the SQL twin (:func:`dup_ngram_frac_sql`):
+    a token never contains a space (it comes from a space split), so
+    the key's first space sits right after ``a + ","``. That fixes
+    ``a``, and the rest up to the closing brace is ``b``."""
     n = F.size(toks)
-    empty = F.arrays_zip(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-    return F.when(
-        n >= 2, F.arrays_zip(F.slice(toks, 1, n - 1), F.slice(toks, 2, n - 1))
-    ).otherwise(empty)
+    pairs = F.arrays_zip(F.slice(toks, 1, n - 1), F.slice(toks, 2, n - 1))
+    empty = F.array().cast("array<string>")
+    return F.when(n >= 2, pairs.cast("array<string>")).otherwise(empty)
 
 
 def dup_ngram_frac_sql(col: str) -> str:
-    toks = tokens_sql(col)
-    grams = (
-        f"list_transform(range(1, len({toks})), "
-        f"i -> {toks}[i] || ' ' || {toks}[i + 1])"
-    )
+    # the token list is bound once through a one-element list_transform;
+    # inlining it into the gram lambda re-splits the text per gram
     return (
-        f"CASE WHEN len({grams}) > 0 THEN "
-        f"(len({grams}) - len(list_distinct({grams})))::DOUBLE / len({grams}) "
-        f"ELSE 0.0 END"
+        f"(list_transform([{tokens_sql(col)}], t -> CASE WHEN len(t) > 1 THEN "
+        f"(len(t) - 1 - len(list_distinct(list_transform(range(1, len(t)), "
+        f"i -> t[i] || ' ' || t[i + 1]))))::DOUBLE / (len(t) - 1) "
+        f"ELSE 0.0 END))[1]"
     )
 
 

@@ -35,15 +35,10 @@ def score_documents(
     cfg = cfg or QualityConfig()
     c = text_col
 
-    # __toks/__lines/__grams each materialized ONCE as a column — an
-    # expression reused inside several signals would be BUILT duplicated
-    # (the dupg tree alone would hold ~4 copies of the gram transform;
-    # measured 10× slower on the 200k-doc pipeline bench, round 2)
-    toked = (
-        df.withColumn("__toks", T.tokens(c))
-        .withColumn("__lines", T.lines(c))
-        .withColumn("__grams", T.word_2gram_pairs(F.col("__toks")))
-    )
+    # __toks/__lines each materialized ONCE as a column — an expression
+    # reused inside several signals would be BUILT duplicated (measured
+    # 10× slower on the 200k-doc pipeline bench, round 2)
+    toked = df.withColumn("__toks", T.tokens(c)).withColumn("__lines", T.lines(c))
     # Second materialization layer: every EXPENSIVE per-row count
     # (array scans, array_distinct, per-token regex) becomes a column,
     # evaluated exactly once. Each ratio below is needed twice — the
@@ -67,8 +62,10 @@ def score_documents(
             "__alpha",
             F.size(F.filter(F.col("__toks"), lambda x: x.rlike(r"\p{L}"))),
         )
-        .withColumn("__ngrams", F.size(F.col("__grams")))
-        .withColumn("__ndupg", F.size(F.array_distinct(F.col("__grams"))))
+        .withColumn("__ngrams", F.greatest(F.col("__nw") - 1, F.lit(0)))
+        .withColumn(
+            "__ndupg", F.size(F.array_distinct(T.word_2grams(F.col("__toks"))))
+        )
         .withColumn("__nduplines", F.size(F.array_distinct(F.col("__lines"))))
         .withColumn(
             "__nell",
@@ -112,7 +109,7 @@ def score_documents(
             checks.append(signals[signal] <= hi)
     keep = reduce(operator.and_, checks)
     return scored.withColumn("keep", keep).drop(
-        "__toks", "__lines", "__grams", "__nw", "__nchars", "__nlines",
+        "__toks", "__lines", "__nw", "__nchars", "__nlines",
         "__syms", "__stop", "__alpha", "__ngrams", "__ndupg",
         "__nduplines", "__nell",
     )
