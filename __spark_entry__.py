@@ -2,9 +2,9 @@
 
 ``entry(spark)`` smoke-runs the flagship document-quality query at
 sf0.001. ``queries()`` / ``oracle_sql()`` expose every implemented
-operator from SURVEY.md §2 as (Spark, DuckDB-SQL) pairs — see
-``textcleaning_spark/queries.py`` where both sides are generated from
-shared specs.
+operator from SURVEY.md §2 as (Spark, DuckDB-SQL) pairs — see the
+``textcleaning_spark/queries/`` package (one module per query family)
+where both sides are generated from shared specs.
 """
 
 from __future__ import annotations

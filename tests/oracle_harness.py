@@ -17,7 +17,7 @@ import pandas as pd
 
 from textcleaning_spark.sources.registry import TABLES
 
-REL_TOL = 0.0  # exact by design; see queries.py determinism notes
+REL_TOL = 0.0  # exact by design; see the textcleaning_spark/queries/ notes
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -85,7 +85,7 @@ def test_hyperball_accuracy_vs_exact(spark):
     """Measured on the md5-derived graph: median rel err ~6% with m=64.
     The bound here is loose (median ≤ 15%, 90% of hosts within 40%) so
     it catches a broken estimator, not estimator noise."""
-    from textcleaning_spark.queries import _lg_edges
+    from textcleaning_spark.queries.graph import _lg_edges
     from textcleaning_spark.sources.registry import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents").select("doc_id")
@@ -129,7 +129,7 @@ def test_targets_variant_equals_full_exact_restricted(spark):
     from textcleaning_spark.operators.centrality import (
         truncated_harmonic_targets,
     )
-    from textcleaning_spark.queries import _lg_edges
+    from textcleaning_spark.queries.graph import _lg_edges
     from textcleaning_spark.sources.registry import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents").select("doc_id")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from textcleaning_spark.plans.pipeline import (
     extract_text,
     html_to_text_py,
+    metrics_table,
     run_quality_pipeline,
 )
 from textcleaning_spark.sources.pages import PAGES_SCHEMA
@@ -109,7 +110,7 @@ def test_text_present_branch_byte_identical(spark):
 def test_mixed_frame_keeps_every_row_once(spark):
     """Text-present, html-only and all-NULL rows in one frame: each url
     comes out exactly once, present text untouched, html-only rows
-    extracted, and a row with neither keeps ``text`` NULL."""
+    extracted, and a row with neither gets empty ``text``."""
     mixed = _pages_df(spark).unionByName(
         spark.createDataFrame(
             [
@@ -125,9 +126,36 @@ def test_mixed_frame_keeps_every_row_once(spark):
     assert len(set(urls)) == len(urls)
     got = {r["url"]: r["text"] for r in rows}
     assert got["https://t/present"] == "kept\tas is "
-    assert got["https://t/empty"] is None
+    assert got["https://t/empty"] == ""
     for url, html in PAGES:
         assert got[url] == html_to_text_py(html.encode("utf-8")), url
+
+
+def test_all_null_page_is_dropped_and_counted(spark):
+    """A page with neither text nor html is scored like an empty page:
+    ``keep`` is never NULL, every dropped row carries a reason, and the
+    metrics table reconciles with the rows in and the rows kept."""
+    pages = _pages_df(spark).unionByName(
+        spark.createDataFrame(
+            [
+                ("https://t/null", _TS, None, None, None),
+                ("https://t/text", _TS, None, "the filter keeps a plain row", "en"),
+            ],
+            PAGES_SCHEMA,
+        )
+    )
+    scored = run_quality_pipeline(pages).localCheckpoint()
+    rows = scored.select("url", "keep", "drop_reasons").collect()
+    assert len(rows) == len(PAGES) + 2
+    assert all(r["keep"] is not None for r in rows)
+    assert all(r["drop_reasons"] for r in rows if not r["keep"])
+    null_page = next(r for r in rows if r["url"] == "https://t/null")
+    assert set(null_page["drop_reasons"]) == {"too_short", "no_stop_words"}
+    m = metrics_table(scored).agg(
+        F.sum("n_docs").alias("n_docs"), F.sum("n_keep").alias("n_keep")
+    ).first()
+    assert m["n_docs"] == len(rows)
+    assert m["n_keep"] == sum(r["keep"] for r in rows)
 
 
 def test_pipeline_plan_still_exchange_free_with_html_rows(spark):

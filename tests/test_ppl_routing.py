@@ -39,8 +39,8 @@ def test_cutoff_routing_matches_exact_within_ties(spark):
 
     # per-bucket counts agree within the number of docs tied AT the
     # two cutoff values (computed from the scored frame itself)
-    base = Q.char_bigram_ppl(spark, SF_ORACLE)
-    docs = Q.load_table(spark, SF_ORACLE, "documents").select("doc_id", "lang")
+    base = Q.selection.char_bigram_ppl(spark, SF_ORACLE)
+    docs = Q.selection.load_table(spark, SF_ORACLE, "documents").select("doc_id", "lang")
     scored = base.join(docs, "doc_id")
     cuts = scored.groupBy("lang").agg(
         F.percentile_approx(

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from textcleaning_spark import queries as Q
 from textcleaning_spark.functions import text as T
-from textcleaning_spark.queries import (
+from textcleaning_spark.queries.dedup import (
     _SPAN_W,
     _bloom_bitmap_lit,
     _bloom_bits,
@@ -73,7 +73,7 @@ def test_bloom_query_equals_exact_query(spark):
 def test_cms_guarantee_whole_vocab(spark):
     """est(word) ≥ exact(word) for EVERY word, not just the audited
     top-k — the structural CMS property the gate relies on."""
-    from textcleaning_spark.queries import _CMS_SEEDS
+    from textcleaning_spark.queries.audits import _CMS_SEEDS
 
     docs = load_table(spark, SF, "documents").select("text")
     wc = (

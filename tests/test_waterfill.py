@@ -7,7 +7,7 @@ import math
 
 import pytest
 
-from textcleaning_spark.queries import _waterfill
+from textcleaning_spark.queries.selection import _waterfill
 
 
 def waterfill_py(avail: dict[str, int]) -> dict[str, tuple[int, bool]]:

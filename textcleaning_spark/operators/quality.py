@@ -4,7 +4,7 @@ This is the engine's flagship stage: the reference's word-level
 keep/drop machinery (idf_rank >= K ∧ major_pos ∈ pass set,
 text_process_v5.py:164-169) generalized to Gopher/C4-style document
 filtering, entirely with native expressions (no Python in the hot
-path) so the whole stage is whole-stage-codegen'd and pushdown-able.
+path), shuffle-free and pushdown-able.
 """
 
 from __future__ import annotations
@@ -29,8 +29,12 @@ def score_documents(
     ``keep`` derives from the signal columns. Catalyst does NOT inline
     a non-cheap expression used more than once (CollapseProject), so
     the text is split exactly once per row — measured ~5× faster than
-    the naive re-derive-per-signal tree, and the whole stage stays one
-    shuffle-free codegen'd project.
+    the naive re-derive-per-signal tree — and the stage is shuffle-free.
+    It is not one codegen'd project: a projection holding a higher-order
+    function (the ``__toks``/``__lines`` ``filter(split(...))``, the
+    per-token filters of the counts) is planned outside whole-stage
+    codegen, so the full output plans as one codegen'd project over
+    three interpreted ones.
     """
     cfg = cfg or QualityConfig()
     c = text_col
