@@ -92,8 +92,6 @@ HEADLINE = [
     "host_pagerank",
     "tokenizer_fertility",
     "script_mix_profile",
-    "host_harmonic_exact",
-    "hyperball_centrality_audit",
     "bpe_fertility",
     "cms_heavy_hitters",
     "decontam_bloom_prefilter",

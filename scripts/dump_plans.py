@@ -55,7 +55,6 @@ FLAGSHIP = [
     ("span_novelty", "novelty curve — first-occurrence linear form: span-keyed min + back-join on the same key, <=10-row decile agg, no forced broadcast"),
     ("host_link_graph", "host edge list — scan-side md5 derivation, one (src,dst)-keyed count agg with map-side partials"),
     ("host_pagerank", "nano-unit PageRank — edge list checkpointed once; per-round: one dst-keyed partial+final agg, host-sized rank frames (final plan reads the round-3 checkpoint)"),
-    ("host_harmonic_exact", "exact truncated harmonic — frontier anti-joins keep the pair frame minimal; nano-snapped 1/d integer sums"),
     ("tokenizer_fertility", "fertility — per-row native byte/char/token arithmetic in the scan project, one lang-keyed agg"),
     ("script_mix_profile", "script census — three codegen'd regexp passes scan-side, one lang-keyed agg"),
     ("cms_heavy_hitters", "CMS audit — fixed 3x256 sketch agg + TakeOrderedAndProject top-k, estimates via broadcast join against the 768-row sketch"),

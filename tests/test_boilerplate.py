@@ -48,13 +48,6 @@ def test_cross_doc_footer_removed_unique_kept(spark):
     assert got[5]["n_removed"] == 0
 
 
-def test_hash_and_string_count_modes_agree(spark):
-    lines = _lines(_pages(spark))
-    a = corpus_line_dedup(lines, min_docs=2, count_on_hash=True)
-    b = corpus_line_dedup(lines, min_docs=2, count_on_hash=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_threshold_boundary(spark):
     # FOOTER is on 4 distinct docs: min_docs=4 removes it, 5 keeps it
     lines = _lines(_pages(spark))

@@ -52,7 +52,6 @@ def test_queries_and_oracles_consistent():
     assert rows_only == [
         "bpe_fertility",
         "bpe_merge_table",
-        "hyperball_centrality_audit",
         "ppl_cutoff_routing",
         "vocab_hll_audit",
     ]

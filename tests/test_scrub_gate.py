@@ -108,3 +108,20 @@ def test_toxic_boundary_next_to_other_digit(spark):
     df = spark.createDataFrame([(text,)], "text string")
     got = df.select(rule_hits(F.col("text"), CFG).alias("h")).first()["h"]
     assert got.asDict() == _py_hits(text)
+
+
+def test_duckdb_scrub_twin_escapes_toxic_terms(monkeypatch):
+    """``scrub_parity``'s DuckDB chain takes each toxic pattern from the
+    same builder as Spark and ``scrub_py``: a term with a regex
+    metacharacter is matched literally, so ``a.b`` leaves ``axb``."""
+    import duckdb
+
+    from textcleaning_spark.queries import audits
+
+    cfg = ScrubConfig(toxic_terms=("a.b",))
+    monkeypatch.setattr(audits, "_SCRUB", cfg)
+    text = "axb a.b"
+    sql = f"SELECT {audits._scrub_sql('t')} FROM (SELECT '{text}' AS t)"
+    got = duckdb.sql(sql).fetchone()[0]
+    assert got == scrub_py(text, cfg)
+    assert got.startswith("axb ")

@@ -1,94 +1,26 @@
-"""Skew-handling helpers (operators/skew.py): the north_rule names
-salted repartitioning + length-bucketed partitions for giant documents
-explicitly, so these are behavior-tested, not just shipped.
+"""Skew guards that run in the package: the PPJoin candidate stage
+(rare-first prefixes keep a shingle every document shares out of every
+prefix) and the co-occurrence hot-key cap.
 
-The differential assertions matter: each salted form must be
-value-equal to its naive twin (salting must never change results),
-and the length-bucket repartition must actually SPREAD the giants
-(the naive bucket-only repartition provably does not — that is the
-failure mode it exists to fix). The last four tests run the same
-helpers on the real ``documents`` table.
+Each guard is differential-tested against its naive twin on an
+adversarial corpus: the guarded form must be value-equal to the naive
+one, and its candidate space must stay bounded where the naive join
+blows up.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from textcleaning_spark.operators.skew import (
-    DEFAULT_LENGTH_BOUNDS,
-    length_bucket,
-    repartition_by_length,
-    salted_group_count,
-    salted_join_small_right,
-)
-from textcleaning_spark.sources.registry import load_table
-from tests.conftest import SF_ORACLE
-
 
 def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_length_bucket_boundaries(spark):
-    vals = [0, 999, 1_000, 9_999, 10_000, 99_999, 100_000, 1_000_000, 5_000_000]
-    df = spark.createDataFrame([(v,) for v in vals], "n_bytes: long")
-    got = [
-        r.b
-        for r in df.select(length_bucket("n_bytes").alias("b"))
-        .orderBy("n_bytes")
-        .collect()
-    ]
-    # number of bounds <= value: 0=tiny ... 4=giant
-    assert got == [0, 0, 1, 1, 2, 2, 3, 4, 4]
-    assert len(DEFAULT_LENGTH_BOUNDS) == 4
 
 
-def test_repartition_by_length_spreads_giants(spark):
-    """8 giant docs + 200 tiny docs, all in ONE input partition. A
-    bucket-only repartition sends every giant to the same partition
-    (identical hash key — the straggler); the salted form spreads
-    them while preserving every row."""
-    rows = [(f"t{i}", 100) for i in range(200)] + [
-        (f"g{i}", 2_000_000) for i in range(8)
-    ]
-    df = spark.createDataFrame(rows, "doc: string, n_bytes: long").coalesce(1)
-
-    naive = df.repartition(8, length_bucket("n_bytes"))
-    naive_giants = (
-        naive.withColumn("pid", F.spark_partition_id())
-        .filter(F.col("n_bytes") > 1_000_000)
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert naive_giants == 1  # the failure mode: one straggler partition
-
-    out = repartition_by_length(df, "n_bytes", 8)
-    assert _sorted_rows(out) == _sorted_rows(df)  # pure repartition
-    assert out.rdd.getNumPartitions() == 8
-    salted_giants = (
-        out.withColumn("pid", F.spark_partition_id())
-        .filter(F.col("n_bytes") > 1_000_000)
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert salted_giants >= 3, (
-        f"giants landed in only {salted_giants} partition(s)"
-    )
 
 
-def test_salted_group_count_equals_plain(spark):
-    """Two-phase salted count must equal the plain groupBy count on a
-    hot-key distribution (one key holds 90% of rows)."""
-    rows = [("hot",)] * 900 + [(f"k{i}",) for i in range(100)]
-    df = spark.createDataFrame(rows, "k: string")
-    got = salted_group_count(df, ["k"], salt_mod=16)
-    want = df.groupBy("k").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    assert _sorted_rows(got) == _sorted_rows(want)
-    # the salted form really is two aggregation phases on distinct keys
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("HashAggregate") >= 4  # (partial+final) x 2 phases
 
 
 def _shingle_sets(df):
@@ -291,57 +223,3 @@ def test_cooccurrence_hot_key_guard_default_on(spark):
 
     # default (config cap 10_000) fires nowhere on this corpus
     assert _sorted_rows(cooccurrence_edges(w)) == _sorted_rows(uncapped)
-
-
-def test_salted_join_small_right_equals_plain(spark):
-    """Salt-replicated join must be value-equal to the plain inner
-    join: hot big-side keys, duplicate small-side keys, and unmatched
-    rows on both sides."""
-    big_rows = [("hot", i) for i in range(500)] + [
-        (f"k{i}", i) for i in range(50)
-    ] + [("nomatch_big", 1)]
-    small_rows = [("hot", "H"), ("k1", "A"), ("k1", "B"), ("nomatch_small", "Z")]
-    big = spark.createDataFrame(big_rows, "k: string, v: long")
-    small = spark.createDataFrame(small_rows, "k: string, tag: string")
-    got = salted_join_small_right(big, small, "k", salt_mod=8)
-    want = big.join(small, "k")
-    assert got.columns == want.columns
-    assert _sorted_rows(got) == _sorted_rows(want)
-
-
-def test_length_bucket_monotone(spark):
-    df = spark.createDataFrame(
-        [(0,), (999,), (1000,), (99_999,), (100_000,), (5_000_000,)], ["n"]
-    )
-    got = [r[0] for r in df.select(length_bucket("n")).collect()]
-    assert got == [0, 0, 1, 2, 3, 4]
-
-
-def test_repartition_by_length_preserves_rows(spark):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    out = repartition_by_length(docs, "n_chars", 8)
-    assert out.count() == docs.count()
-    assert out.rdd.getNumPartitions() == 8
-
-
-def test_salted_group_count_matches_plain(spark):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    plain = {
-        (r["lang"],): r["cnt"]
-        for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    salted = {
-        (r["lang"],): r["cnt"] for r in salted_group_count(docs, ["lang"]).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_matches_plain(spark):
-    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "lang")
-    dims = spark.createDataFrame(
-        [("en", "latin"), ("de", "latin"), ("fr", "latin"), ("es", "latin"), ("zh", "cjk")],
-        ["lang", "script"],
-    )
-    plain = docs.join(dims, "lang").count()
-    salted = salted_join_small_right(docs, dims, "lang").count()
-    assert salted == plain

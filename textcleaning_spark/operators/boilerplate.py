@@ -13,13 +13,11 @@ Scale shape
 -----------
 * Occurrence counting groups on the 64-bit ``xxhash64`` of the line,
   not the line string, so the counting shuffle moves 8-byte keys
-  instead of raw text (``count_on_hash=True``, the default; a
-  differential test asserts hash- and string-keyed modes agree).
+  instead of raw text (``boilerplate_line_scrub``'s DuckDB oracle
+  groups on the string, so the registry checks that the two agree).
 * The dup set (lines on >= ``min_docs`` DISTINCT pages) is the
   boilerplate vocabulary of the crawl — tiny relative to the corpus —
-  so it is broadcast back as a hash join (``broadcast_dup=True``).
-  If a pathological corpus makes it large, pass ``False`` and AQE
-  picks the strategy.
+  so it is broadcast back as a hash join.
 * Per-document reassembly shuffles on the document id once;
   ``collect_list`` of (pos, line) structs + ``array_sort`` keeps the
   rebuild deterministic without a window sort.
@@ -38,8 +36,6 @@ def corpus_line_dedup(
     line_col: str = "line",
     min_docs: int = 3,
     joiner: str = "\n",
-    count_on_hash: bool = True,
-    broadcast_dup: bool = True,
 ) -> DataFrame:
     """Remove lines that occur on >= ``min_docs`` distinct documents.
 
@@ -53,16 +49,13 @@ def corpus_line_dedup(
     ``pos`` order ('' when every line was boilerplate). Documents with
     zero input lines produce zero output rows (nothing to rebuild).
     """
-    key = F.xxhash64(line_col) if count_on_hash else F.col(line_col)
-    with_key = lines.withColumn("__lk", key)
-    dup = (
+    with_key = lines.withColumn("__lk", F.xxhash64(line_col))
+    dup = F.broadcast(
         with_key.groupBy("__lk")
         .agg(F.count_distinct(id_col).alias("__nd"))
         .filter(F.col("__nd") >= F.lit(min_docs))
         .select("__lk", F.lit(True).alias("__dup"))
     )
-    if broadcast_dup:
-        dup = F.broadcast(dup)
     flagged = with_key.join(dup, "__lk", "left").withColumn(
         "__dup", F.coalesce(F.col("__dup"), F.lit(False))
     )

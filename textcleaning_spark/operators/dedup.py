@@ -54,7 +54,6 @@ def minhash_signature_sets(
     doc_col: str,
     toks_col: str,
     k: int = 8,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """k-permutation MinHash over a pre-built distinct-element array
     column: permutation i = md5("<i>|" + token), signature =
@@ -69,7 +68,7 @@ def minhash_signature_sets(
         ).alias(f"sig_{i}")
         for i in range(k)
     ]
-    return df.select(F.col(doc_col), *[F.col(c) for c in keep_cols], *sig_cols)
+    return df.select(F.col(doc_col), *sig_cols)
 
 
 def minhash_signature(
@@ -77,22 +76,17 @@ def minhash_signature(
     doc_col: str,
     text_col: str,
     k: int = 8,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """MinHash signatures from raw text (see
     :func:`minhash_signature_sets`). The token set is materialized as
     a column FIRST so tokenize+distinct runs once per row —
     referencing the expression from all k signature columns would
     build (and execute) k copies of it (CollapseProject keeps a
-    non-cheap multiply-referenced expression in its own Project).
-    ``keep_cols`` pass through untouched (streaming callers can't join
-    the signature frame back — that would be a stream-stream join)."""
+    non-cheap multiply-referenced expression in its own Project)."""
     setted = df.select(
-        F.col(doc_col),
-        *[F.col(c) for c in keep_cols],
-        F.array_distinct(tokens(text_col)).alias("__toks"),
+        F.col(doc_col), F.array_distinct(tokens(text_col)).alias("__toks")
     )
-    return minhash_signature_sets(setted, doc_col, "__toks", k, keep_cols)
+    return minhash_signature_sets(setted, doc_col, "__toks", k)
 
 
 def minhash_signature_sql(text_col: str, k: int = 8) -> list[str]:
@@ -423,11 +417,6 @@ def simhash(
     for c in bit_cols[1:]:
         fp = fp + c
     return hashed.select(F.col(doc_col), fp.cast("bigint").alias("simhash"))
-
-
-def simhash16(df: DataFrame, doc_col: str, text_col: str) -> DataFrame:
-    """16-bit SimHash (engine-portable twin of the fingerprint query)."""
-    return simhash(df, doc_col, text_col, n_bits=16)
 
 
 def simhash_near_dup(

@@ -9,7 +9,11 @@ from pyspark.sql import functions as F
 
 from textcleaning_spark.config import ScrubConfig
 from textcleaning_spark.functions import text as T
-from textcleaning_spark.functions.scrub import scrub_chain
+from textcleaning_spark.functions.scrub import (
+    _rule_patterns,
+    _toxic_pattern,
+    scrub_chain,
+)
 from textcleaning_spark.operators import quality as q
 from textcleaning_spark.queries import register
 from textcleaning_spark.queries.common import (
@@ -26,15 +30,16 @@ from textcleaning_spark.sources.registry import load_table
 # PII / toxicity scrub parity (F9 generalized; north_rule scrub)
 # ---------------------------------------------------------------------------
 _SCRUB = ScrubConfig(toxic_terms=("spark",))
+_TOX_PAT = _toxic_pattern(*_SCRUB.toxic_terms)
 
 
 def _scrub_sql(col: str) -> str:
+    """DuckDB twin of ``scrub_chain``: the same patterns, from the same
+    builder, in the same order."""
     out = col
-    for _name, pat, rep in _SCRUB.rules:
+    for _name, pat, rep in _rule_patterns(_SCRUB):
         p = pat.replace("'", "''")
         out = f"regexp_replace({out}, '{p}', '{rep}', 'g')"
-    for term in _SCRUB.toxic_terms:
-        out = f"regexp_replace({out}, '\\b{term}\\b', '{_SCRUB.toxic_replacement}', 'g')"
     return out
 
 
@@ -43,7 +48,7 @@ def _scrub_sql(col: str) -> str:
     f"""
     SELECT doc_id,
            md5({_scrub_sql('text')}) AS scrub_hash,
-           len(regexp_extract_all(text, '\\bspark\\b'))::BIGINT AS tox_hits
+           len(regexp_extract_all(text, '{_TOX_PAT}'))::BIGINT AS tox_hits
     FROM documents
     """,
 )
@@ -54,7 +59,7 @@ def scrub_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.md5(F.encode(scrub_chain(F.col("text"), _SCRUB), "UTF-8")).alias("scrub_hash"),
-        F.regexp_count(F.col("text"), F.lit(r"\bspark\b")).cast("bigint").alias("tox_hits"),
+        F.regexp_count(F.col("text"), F.lit(_TOX_PAT)).cast("bigint").alias("tox_hits"),
     )
 
 

@@ -58,8 +58,8 @@ from textcleaning_spark.sources.registry import load_table
 def incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-shaped upsert: full outer join on the document key,
     coalesce per column, action label per row. At scale the join
-    shuffles both sides on doc_id once; with a bucketed base table
-    (operators/bucketing.py) the base side's exchange disappears."""
+    shuffles both sides on doc_id once; with a base table bucketed on
+    doc_id the base side's exchange disappears."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     upd = d.filter(F.col("doc_id") % 7 == 0).select(
         "doc_id", F.concat(F.lit("recrawl: "), F.col("text")).alias("text"), "lang"

@@ -203,7 +203,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over distinct tokens as native expressions —
     near-dup docs differ in few fingerprint bits."""
     docs = load_table(spark, sf_dir, "documents")
-    return dd.simhash16(docs, "doc_id", "text")
+    return dd.simhash(docs, "doc_id", "text", n_bits=16)
 
 
 # ---------------------------------------------------------------------------
@@ -469,8 +469,8 @@ def boilerplate_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines, 362/500 docs touched at sf0.01).
 
     Counting groups on xxhash64(line) — the scale path, 8-byte shuffle
-    keys — while the oracle groups on the string; hash-vs-string parity
-    is additionally diff-asserted in tests/test_boilerplate.py.
+    keys — while the oracle groups on the string, so the oracle check
+    is also the hash-vs-string parity check.
 
     Complements the WITHIN-document dup-line keep rule
     (reference text_process_v5.py dup-fraction; plans/pipeline.py)."""
@@ -491,9 +491,7 @@ def boilerplate_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     lines = toked.select("doc_id", F.posexplode(chunks).alias("pos", "line"))
-    deduped = corpus_line_dedup(
-        lines, min_docs=_BOILER_MIN_DOCS, joiner=" ", count_on_hash=True
-    )
+    deduped = corpus_line_dedup(lines, min_docs=_BOILER_MIN_DOCS, joiner=" ")
     return deduped.select(
         "doc_id",
         "n_lines",

@@ -1,5 +1,5 @@
-"""Graph family: the host link graph derived from doc_id, PageRank and
-harmonic centrality (exact twin and HyperBall sketch)."""
+"""Graph family: the host link graph derived from doc_id and its
+PageRank."""
 
 from __future__ import annotations
 
@@ -183,151 +183,3 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.select(
         "host", "rank_nano", F.col("rank").alias("pagerank")
     ).orderBy(F.desc("rank_nano"), "host")
-
-
-# ---------------------------------------------------------------------------
-# Harmonic centrality: exact truncated twin (oracle-backed) + the
-# HyperBall sketch with an in-query accuracy gate — the second
-# host-reputation rank crawls publish next to PageRank (Common
-# Crawl ships harmonic centrality, computed with HyperBall).
-# ---------------------------------------------------------------------------
-_HC_RADIUS = 3
-
-
-@register(
-    "host_harmonic_exact",
-    f"""
-    WITH {_LG_EDGES_SQL},
-    nodes AS (
-        SELECT src_host AS host FROM edges
-        UNION
-        SELECT dst_host FROM edges
-    ),
-    r1 AS (
-        SELECT DISTINCT src_host AS u, dst_host AS v
-        FROM edges WHERE src_host <> dst_host
-    ),
-    r2 AS (
-        SELECT DISTINCT a.u, e.dst_host AS v
-        FROM r1 a JOIN edges e ON e.src_host = a.v
-        WHERE a.u <> e.dst_host
-          AND NOT EXISTS (SELECT 1 FROM r1 s
-                          WHERE s.u = a.u AND s.v = e.dst_host)
-    ),
-    r3 AS (
-        SELECT DISTINCT a.u, e.dst_host AS v
-        FROM r2 a JOIN edges e ON e.src_host = a.v
-        WHERE a.u <> e.dst_host
-          AND NOT EXISTS (SELECT 1 FROM r1 s
-                          WHERE s.u = a.u AND s.v = e.dst_host)
-          AND NOT EXISTS (SELECT 1 FROM r2 s
-                          WHERE s.u = a.u AND s.v = e.dst_host)
-    ),
-    pairs AS (
-        SELECT u, v, 1::BIGINT AS dist FROM r1
-        UNION ALL SELECT u, v, 2::BIGINT FROM r2
-        UNION ALL SELECT u, v, 3::BIGINT FROM r3
-    ),
-    per_v AS (
-        SELECT v AS host, count(*)::BIGINT AS n_reaching,
-               sum(CAST(FLOOR(1000000000.0::DOUBLE / dist) AS BIGINT))::BIGINT
-                   AS harmonic_nano
-        FROM pairs GROUP BY 1
-    )
-    SELECT n.host,
-           coalesce(p.n_reaching, 0)::BIGINT AS n_reaching,
-           coalesce(p.harmonic_nano, 0)::BIGINT AS harmonic_nano,
-           CAST(coalesce(p.harmonic_nano, 0) AS DOUBLE)
-               / 1000000000.0::DOUBLE AS harmonic
-    FROM nodes n LEFT JOIN per_v p ON p.host = n.host
-    ORDER BY harmonic_nano DESC, n.host
-    """,
-)
-def host_harmonic_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact harmonic centrality H(v) = Σ 1/d(u,v), truncated at
-    radius 3, over the derived host graph — the truth twin the
-    HyperBall audit gates against. 1/d terms snap to integer
-    nano-units before summing (order-independent, oracle-exact).
-
-    Scale shape (operators/centrality.truncated_harmonic): the
-    distinct (u, v, min-dist) pair frame is O(hosts²) at full
-    connectivity — affordable at audit scale, exactly what a 10⁸-host
-    graph CANNOT materialize; the sketch twin below is the scale
-    path. Frontier rounds keep the frame minimal (each round anti-
-    joins the already-reached set, so a pair shuffles once, at its
-    min distance)."""
-    from textcleaning_spark.operators import centrality as ct
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    out = ct.truncated_harmonic(_lg_edges(docs), radius=_HC_RADIUS)
-    return out.orderBy(F.desc("harmonic_nano"), "host")
-
-
-@register("hyperball_centrality_audit")  # rows-only: register placement is
-# Spark's xxhash64 — no SQL oracle can replay it; the gate is in-query
-# against the oracle-checked exact twin (minhash_lsh_recall pattern)
-def hyperball_centrality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperBall harmonic centrality (Boldi & Vigna 2013) vs the exact
-    truncated twin on a DETERMINISTIC md5 HOST SAMPLE (5/16 of hosts),
-    GATED in-query: rows exist only while ≥ 90% of reachable sampled
-    hosts estimate within 30% relative error (measured here: median
-    ~6%, p90 ~14% with m=64 registers), so a sketch regression makes
-    the rows-only count collapse.
-
-    Sampling (the minhash_lsh_recall pattern): the
-    truth side runs operators/centrality.truncated_harmonic_targets —
-    a reversed-edge BFS seeded only at the sampled hosts, an
-    O(|sample| × hosts) frame instead of the full O(hosts²) pair
-    space, and differential-tested equal to the full exact twin
-    restricted to the sample (tests/test_centrality.py). The
-    oracle-checked full twin (host_harmonic_exact) is unchanged.
-
-    Scale shape (operators/centrality.hyperball_harmonic): per round
-    ONE edges⋈registers join (≤ E×m rows, 10-byte (node, idx) keys)
-    and ONE max-aggregate with map-side partials — no arrays, no
-    Python, no O(hosts²) pair frame anywhere in this audit now."""
-    from textcleaning_spark.operators import centrality as ct
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    edges = _lg_edges(docs).localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    sample = nodes.filter(
-        F.substring(F.md5(F.concat(F.col("host"), F.lit(":hbsample"))), 1, 1).isin(
-            "0", "1", "2", "3", "4"
-        )
-    )
-    exact = ct.truncated_harmonic_targets(edges, sample, radius=_HC_RADIUS)
-    sketch = ct.hyperball_harmonic(edges, radius=_HC_RADIUS)
-    joined = (
-        exact.join(sketch, "host")
-        .select(
-            "host",
-            "harmonic",
-            F.round("harmonic_est", 6).alias("harmonic_est"),
-            F.when(
-                F.col("harmonic") > 0,
-                F.round(
-                    F.abs(F.col("harmonic_est") - F.col("harmonic"))
-                    / F.col("harmonic"),
-                    6,
-                ),
-            ).alias("rel_error"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    acc = joined.filter(F.col("rel_error").isNotNull()).agg(
-        F.count(F.lit(1)).alias("n_pos"),
-        F.sum(
-            F.when(F.col("rel_error") <= 0.30, 1).otherwise(0)
-        ).alias("n_within"),
-    )
-    return (
-        joined.crossJoin(acc)
-        .filter(F.col("n_within") * 10 >= F.col("n_pos") * 9)
-        .select("host", "harmonic", "harmonic_est", "rel_error")
-        .orderBy(F.desc("harmonic"), "host")
-    )

@@ -754,10 +754,9 @@ def subtoken_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-decile profile (the length-bucketing signal used for skew
-    partitioning, operators/skew.py). ntile needs a global sort — fine
-    for a profile query; the pipeline's bucket column uses fixed bounds
-    so no global shuffle at scale."""
+    """Length-decile profile: where the corpus's length mass sits. ntile
+    needs a global sort — fine for a profile query; a length bucket for
+    partitioning at scale would use fixed bounds, so no global shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     w = Window.orderBy(F.col("n_chars").asc(), F.col("doc_id").asc())
     return (
@@ -948,10 +947,9 @@ def vocab_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Power-of-two token-count histogram with cumulative token mass —
     the report a training pipeline reads to size sequence packing and
-    length-bucketed partitions (operators/skew.py uses the same bucket
-    key). floor(log2 n) is computed EXACTLY in both engines as
-    length(bin(n))-1 (integer bit-length; float log2 at bucket
-    boundaries is not portable). One explode-free scan + a tiny
+    length-bucketed partitions. floor(log2 n) is computed EXACTLY in
+    both engines as length(bin(n))-1 (integer bit-length; float log2 at
+    bucket boundaries is not portable). One explode-free scan + a tiny
     per-bucket agg; the cumulative window runs over ≤64 rows."""
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(T.n_words("text").alias("n")).filter(F.col("n") >= 1)
